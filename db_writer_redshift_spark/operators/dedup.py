@@ -18,7 +18,9 @@ Nothing here collects to the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from db_writer_redshift_spark.functions.text import ngrams, shingles
@@ -450,33 +452,40 @@ def minhash_cross_contamination(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, seed: int = 42) -> DataFrame:
-    """64-bit SimHash per document: per-token xxhash64, sum ±1 per bit
-    position weighted by token count, sign → bit.
+def _simhash(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    token_hash: Callable[[Column], Column],
+    bits: int,
+) -> DataFrame:
+    """SimHash fingerprint builder: ``token_hash`` maps the token column to
+    a BIGINT; each of the low ``bits`` bit positions sums ±1 per token
+    occurrence, and the sign of each sum is the fingerprint bit.
 
-    Implementation: explode tokens → one groupBy(doc) computing 64 bit-sums
+    Implementation: explode tokens → one groupBy(doc) computing the bit-sums
     in a single shuffle (partial aggregation map-side), then assemble the
     fingerprint with shiftleft/bitwise-or. All JVM expressions.
     """
     base = ensure_parallelism(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")),
-        key="doc_id",  # the 64-bit-sum groupBy reuses this exchange
+        key="doc_id",  # the bit-sum groupBy reuses this exchange
         bytes_per_task=TEXT_KERNEL_BYTES_PER_TASK,
     )
     tokens = base.select(
         "doc_id",
         F.explode(F.split(F.lower(F.col("__t")), " ")).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok", F.lit(seed)))
+    ).withColumn("h", token_hash(F.col("tok")))
     bit_sums = tokens.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"b{j}")
-            for j in range(64)
+            for j in range(bits)
         ]
     )
     fp = F.lit(0).cast("bigint")
-    for j in range(64):
+    for j in range(bits):
         fp = fp.bitwiseOR(
             F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("bigint"), j)).otherwise(
                 F.lit(0).cast("bigint")
@@ -485,134 +494,26 @@ def simhash(df: DataFrame, id_col: str, text_col: str, seed: int = 42) -> DataFr
     return bit_sums.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 6, seed: int = 42
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
+def _simhash_pairs(sh: DataFrame, chunk_bits: int, max_hamming: int) -> DataFrame:
+    """Near-dup pairs of a (doc_id, simhash) relation by hamming distance
+    ≤ max_hamming.
 
     Candidate generation (Manku-style multi-probe blocking): split the
-    64-bit fingerprint into 4 × 16-bit chunks. One side of the join emits
-    each chunk's exact value; the other side also emits all 16 one-bit
-    flips of each chunk (17 probe keys per chunk). The equi-join on
+    fingerprint into 4 × ``chunk_bits``-bit chunks. One side of the join
+    emits each chunk's exact value; the other side also emits all
+    ``chunk_bits`` one-bit flips of each chunk. The equi-join on
     (chunk_idx, value) therefore catches every pair whose chunk differs by
     ≤1 bit — and by pigeonhole, hamming ≤ 6 over 4 chunks forces some
     chunk to carry ≤1 flip (4×2 > 6), so candidate generation is COMPLETE
     for the default radius. Never an all-pairs product: buckets key on
-    16-bit values (65k spread), probe fan-out is a fixed 68 rows/doc.
+    chunk values, probe fan-out is a fixed 4·(chunk_bits+1) rows/doc.
     """
     # Two consumers (exact chunks + probe fan-out) in one job — persist
-    # and materialize eagerly so the 64-bit-sum aggregation over exploded
+    # and materialize eagerly so the bit-sum aggregation over exploded
     # tokens runs once, not twice (lazy persist would let them race).
-    sh = simhash(df, id_col, text_col, seed).persist()  # lazy-plan persist (persist_policy.py)
+    sh = sh.persist()  # lazy-plan persist (persist_policy.py)
     sh.count()
-
-    def chunk_val(i: int) -> F.Column:
-        return F.shiftrightunsigned(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))
-
-    exact = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[F.struct(F.lit(i).alias("ci"), chunk_val(i).alias("cv")) for i in range(4)])
-        ).alias("c"),
-    ).select("doc_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    probes = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.flatten(
-                F.array(
-                    *[
-                        F.array(
-                            F.struct(F.lit(i).alias("ci"), chunk_val(i).alias("cv")),
-                            *[
-                                F.struct(
-                                    F.lit(i).alias("ci"),
-                                    chunk_val(i)
-                                    .bitwiseXOR(F.lit(1 << j))
-                                    .alias("cv"),
-                                )
-                                for j in range(16)
-                            ],
-                        )
-                        for i in range(4)
-                    ]
-                )
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    a, b = exact.alias("a"), probes.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-_SIMHASH_PORTABLE_BITS = 60  # 15 md5 hex chars — signed-BIGINT-safe in both engines
-_SIMHASH_PORTABLE_CHUNK = 15  # 4 chunks × 15 bits; 4×2 > 6 keeps pigeonhole complete
-
-
-def simhash_portable(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """60-bit SimHash with the engine-portable token hash (integer of the
-    first 15 md5 hex chars): every bit-sum and fingerprint reproduces in
-    DuckDB SQL. Same plan shape as simhash (explode → one 60-bit-sum
-    aggregate → shift/or assembly); 60 bits instead of 64 so the value
-    stays inside signed BIGINT range in both engines."""
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")),
-        key="doc_id",  # the 60-bit-sum groupBy reuses this exchange
-        bytes_per_task=TEXT_KERNEL_BYTES_PER_TASK,
-    )
-    tokens = base.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("__t")), " ")).alias("tok"),
-    ).withColumn(
-        "h", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
-    )
-    bit_sums = tokens.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{j}")
-            for j in range(_SIMHASH_PORTABLE_BITS)
-        ]
-    )
-    fp = F.lit(0).cast("bigint")
-    for j in range(_SIMHASH_PORTABLE_BITS):
-        fp = fp.bitwiseOR(
-            F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("bigint"), j)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return bit_sums.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_pairs_portable(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 6
-) -> DataFrame:
-    """simhash_pairs over the portable 60-bit fingerprint: 4 × 15-bit
-    Manku chunk blocking (exact + 15 one-bit probes per chunk — complete
-    for hamming ≤ 6 by pigeonhole), hamming via bit_count(xor). Fully
-    oracle-checkable (query dedup_simhash_portable)."""
-    chunk_bits = _SIMHASH_PORTABLE_CHUNK
     mask = (1 << chunk_bits) - 1
-    sh = simhash_portable(df, id_col, text_col).persist()  # lazy-plan persist (persist_policy.py)
-    sh.count()
 
     def chunk_val(i: int) -> F.Column:
         return F.shiftrightunsigned(F.col("simhash"), chunk_bits * i).bitwiseAND(F.lit(mask))
@@ -666,6 +567,53 @@ def simhash_pairs_portable(
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
+    )
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str, seed: int = 42) -> DataFrame:
+    """64-bit SimHash per document: per-token xxhash64, sum ±1 per bit
+    position weighted by token count, sign → bit (see _simhash)."""
+    return _simhash(df, id_col, text_col, lambda tok: F.xxhash64(tok, F.lit(seed)), 64)
+
+
+def simhash_pairs(
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 6, seed: int = 42
+) -> DataFrame:
+    """Near-dup pairs by SimHash hamming distance ≤ max_hamming: 4 × 16-bit
+    Manku chunk blocking (exact + 16 one-bit probes per chunk — complete
+    for hamming ≤ 6 by pigeonhole; see _simhash_pairs), hamming via
+    bit_count(xor)."""
+    return _simhash_pairs(simhash(df, id_col, text_col, seed), 16, max_hamming)
+
+
+_SIMHASH_PORTABLE_BITS = 60  # 15 md5 hex chars — signed-BIGINT-safe in both engines
+_SIMHASH_PORTABLE_CHUNK = 15  # 4 chunks × 15 bits; 4×2 > 6 keeps pigeonhole complete
+
+
+def simhash_portable(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """60-bit SimHash with the engine-portable token hash (integer of the
+    first 15 md5 hex chars): every bit-sum and fingerprint reproduces in
+    DuckDB SQL. Same plan as simhash (explode → one 60-bit-sum aggregate
+    → shift/or assembly); 60 bits instead of 64 so the value stays inside
+    signed BIGINT range in both engines."""
+    return _simhash(
+        df,
+        id_col,
+        text_col,
+        lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("bigint"),
+        _SIMHASH_PORTABLE_BITS,
+    )
+
+
+def simhash_pairs_portable(
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 6
+) -> DataFrame:
+    """simhash_pairs over the portable 60-bit fingerprint: 4 × 15-bit
+    Manku chunk blocking (exact + 15 one-bit probes per chunk — complete
+    for hamming ≤ 6 by pigeonhole), hamming via bit_count(xor). Fully
+    oracle-checkable (query dedup_simhash_portable)."""
+    return _simhash_pairs(
+        simhash_portable(df, id_col, text_col), _SIMHASH_PORTABLE_CHUNK, max_hamming
     )
 
 

@@ -102,9 +102,9 @@ def bm25_bigram_topk(
     term_set = sorted({t for _, t in pairs})  # tiny: literal probe list
 
     from db_writer_redshift_spark.operators.partitioning import (
-    TEXT_KERNEL_BYTES_PER_TASK,
-    ensure_parallelism,
-)
+        TEXT_KERNEL_BYTES_PER_TASK,
+        ensure_parallelism,
+    )
 
     # grams feeds the corpus totals AND the inverted-list probe: persist
     # so the bigram explode runs once, and guard scan parallelism (the

@@ -191,3 +191,36 @@ def test_semantic_contamination_flags_near_parallel_vector(spark):
     out = semantic_contamination_portable(train, ev, threshold=0.9).collect()
     assert [(r.train_id, r.first_eval_id) for r in out] == [(1, 100)]
     assert out[0].max_cosine >= 0.9
+
+
+def _one_bucket(vec):
+    """A constant bucket kernel: two tables, each with a single bucket that
+    holds every vector. Candidate generation is complete, and every pair
+    collides twice, so the skeleton's dedup is exercised too."""
+    return F.array(F.lit(0).cast("bigint"), F.lit(0).cast("bigint"))
+
+
+def test_lsh_skeletons_with_one_bucket_equal_the_exact_baselines(spark, emb):
+    """With a single-bucket kernel every pair is a candidate, so the LSH
+    dup-pair and top-k skeletons must return exactly the exact baselines'
+    rows: the same pairs and ranks, bit-identical cosine_sim. Checks the
+    candidate dedup and the cosine rejoin independently of recall."""
+    sample = emb.filter(F.col("vec_id") % 10 == 0)
+    exact = {
+        (r.id_a, r.id_b): r.cosine_sim
+        for r in similarity.cosine_dup_pairs(sample, "vec_id", "embedding", threshold=0.2).collect()
+    }
+    skel = similarity._lsh_dup_pairs(sample, "vec_id", "embedding", 0.2, _one_bucket)
+    rows = skel.collect()
+    assert exact, "fixture produced no exact dup pairs - threshold too high"
+    assert len(rows) == len(exact)
+    assert {(r.id_a, r.id_b): r.cosine_sim for r in rows} == exact
+
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    exact_topk = sorted(
+        tuple(r) for r in similarity.brute_force_topk(queries, emb, "vec_id", "embedding", k=5).collect()
+    )
+    skel_topk = sorted(
+        tuple(r) for r in similarity._lsh_topk(queries, emb, "vec_id", "embedding", 5, _one_bucket).collect()
+    )
+    assert exact_topk and skel_topk == exact_topk
