@@ -5,7 +5,8 @@ Reference parity:
   StructType; ``ignore`` columns excluded; defaults kept in column metadata.
 * ``drop``         (Redshift.php:124-127) → DROP TABLE IF EXISTS.
 * ``tableExists``  (Redshift.php:216-224) → spark.catalog.tableExists.
-* ``generateTmpName`` (Redshift.php:345-348) → same ``_temp_<uniqid>`` scheme.
+* ``generateTmpName`` (Redshift.php:345-348) → same ``_temp_<uniqid>`` scheme,
+  the staging table of replace_table's write-once rename swap.
 * ``showTables``/``getTableInfo`` — unimplemented stubs in the reference
   (Redshift.php:295-303); implemented properly here via spark.catalog (A-5).
 
@@ -18,10 +19,11 @@ from __future__ import annotations
 import re
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from db_writer_redshift_spark.config.errors import UserException
+from db_writer_redshift_spark.config.errors import ApplicationException, UserException
 from db_writer_redshift_spark.config.schema import TableConfig, struct_type_for
 
 _IDENT_OK = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
@@ -149,15 +151,56 @@ def create_table(
     )
 
 
-def overwrite_table(df: DataFrame, name: str) -> None:
-    """saveAsTable(overwrite) that survives adopted/orphan targets: an
-    adopted (location-based) table's implicit drop keeps its files, and a
-    bare orphan dir has no catalog entry — either makes a plain
-    ``saveAsTable`` fail with LOCATION_ALREADY_EXISTS. Every overwrite of
-    a possibly-preexisting table must go through here (writer._write,
-    compact_table, the streaming table sinks)."""
-    drop_table(df.sparkSession, name)
-    df.write.mode("overwrite").saveAsTable(name)
+def replace_table(
+    df: DataFrame,
+    name: str,
+    buckets: int | None = None,
+    bucket_by: Sequence[str] = (),
+) -> None:
+    """Replace table ``name`` with ``df`` — the one table-replace path
+    (full and incremental loads, compaction, the streaming table sinks).
+
+    The reference's staging scheme (L-10) as a write-once swap: ``df`` is
+    written ONCE, in its final layout, into a fresh ``_temp_`` table; only
+    after that write has committed is the target dropped and the staging
+    table renamed onto it (a managed-table rename moves the directory and
+    keeps the bucket spec). No data job runs between the drop and the
+    rename, so the only exposed window is two metadata operations. ``df``
+    may read ``name`` itself: the write completes before the drop.
+
+    ``buckets`` + ``bucket_by``: hash-bucket + sort on those columns (the
+    Spark analog of a Redshift DISTKEY/SORTKEY, which the reference never
+    set) — the next incremental merge's anti join then reads co-located,
+    pre-sorted buckets and skips the target-side shuffle.
+
+    A failure before the staging write commits leaves the target untouched
+    and is safe to retry. A failure in the drop or the rename keeps the
+    staging table (it may hold the only copy of the new contents) and
+    raises ApplicationException naming it: a retry would find no target
+    and rebuild it from the increment alone.
+    """
+    spark = df.sparkSession
+    tmp = generate_tmp_name(name)
+    drop_table(spark, tmp)
+    w = df.write.mode("overwrite")
+    if buckets and bucket_by:
+        w = w.bucketBy(buckets, *bucket_by).sortBy(*bucket_by)
+    try:
+        w.saveAsTable(tmp)
+    except Exception:
+        drop_table(spark, tmp)  # uncommitted: at most a partial location
+        raise
+    try:
+        # drop_table also clears the location, which the rename needs
+        # free: an adopted table's DROP keeps its files, an orphan dir has
+        # no catalog entry at all
+        drop_table(spark, name)
+        spark.sql(f"ALTER TABLE {quote_ident(tmp)} RENAME TO {quote_ident(name)}")
+    except Exception as exc:
+        raise ApplicationException(
+            f'Replacing table "{name}" failed after its new contents were '
+            f'written; they are kept in table "{tmp}"'
+        ) from exc
 
 
 _TMP_NAME = re.compile(r"_temp_[0-9a-f]+\Z")

@@ -8,8 +8,11 @@ width, so a long-lived table drifts toward many small files, and at
 task-scheduling and footer-reading overhead, not I/O.
 
 Compaction = rewrite to ``ceil(total_bytes / target_file_bytes)``
-partitions through the same staging-swap used by the incremental path
-(crash mid-compaction leaves the old table intact). Uses coalesce(), not
+partitions through ``catalog.replace_table``, the write-once rename swap
+every table replace uses: a failure while the data is rewritten leaves
+the old table intact; only the final drop→rename (metadata) is not
+atomic, and a failure there keeps the rewritten ``_temp_`` table and
+raises ApplicationException naming it. Uses coalesce(), not
 repartition(): compaction must not pay a shuffle — merging co-located
 splits map-side is the whole point. The trade: coalesce can't split
 oversized files — tables needing splits (not merges) should be rewritten
@@ -46,7 +49,7 @@ def compact_table(
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files_to_compact: int = 2,
 ) -> dict:
-    """Compact ``name`` to ~``target_file_bytes`` files via staging swap.
+    """Compact ``name`` to ~``target_file_bytes`` files via a rename swap.
 
     Returns a report dict {files_before, bytes, files_after, compacted}.
     No-op (compacted=False) when the table already has fewer than
@@ -63,14 +66,7 @@ def compact_table(
             "files_after": n_files,
             "compacted": False,
         }
-    tmp = catalog.generate_tmp_name(name)
-    spark.table(name).coalesce(target_n).write.mode("overwrite").saveAsTable(tmp)
-    try:
-        # overwrite_table, not bare saveAsTable: the target may be an
-        # adopted (location-based) cross-process table
-        catalog.overwrite_table(spark.table(tmp).coalesce(target_n), name)
-    finally:
-        catalog.drop_table(spark, tmp)
+    catalog.replace_table(spark.table(name).coalesce(target_n), name)
     n_after, _ = table_file_stats(spark, name)
     return {
         "files_before": n_files,

@@ -11,10 +11,11 @@ holds duplicate PKs, nondeterministic (UPDATE picks an arbitrary match).
 
 Spark-first rewrite: the merged relation is *computed* functionally —
   merged = target ⟕anti staging  ∪  staging
-one LEFT ANTI join + one unionByName, then swapped in with a single
-overwrite. The multi-statement race disappears. Duplicate staging PKs are
-resolved deterministically ("last occurrence wins" via a monotonic order
-column) — a documented improvement over the reference (SURVEY.md §7 Phase 3).
+one LEFT ANTI join + one unionByName, then written once and renamed onto
+the target (catalog.replace_table). The multi-statement race disappears.
+Duplicate staging PKs are resolved deterministically ("last occurrence
+wins" via a monotonic order column) — a documented improvement over the
+reference (SURVEY.md §7 Phase 3).
 
 Scale: the anti join hash-partitions both sides on the PK. When staging is
 small relative to target (the common incremental case) Catalyst broadcasts

@@ -1,8 +1,10 @@
 """Atomic multi-table publish: versioned snapshot directories + a CURRENT
 pointer file.
 
-The writer's per-table overwrite (operators/writer.py) is atomic for ONE
-table; a pipeline that refreshes several tables (facts + their rollups +
+The writer's per-table replace (catalog.replace_table) writes the new
+contents before it touches the old table, but its final drop→rename is two
+metadata operations, not one, and it covers ONE table only; a pipeline
+that refreshes several tables (facts + their rollups +
 dimension snapshots) needs readers to see either the old set or the new
 set — never a mix. The reference has no such facility (it issues
 independent per-table loads with no transaction wrapper — SURVEY.md §3

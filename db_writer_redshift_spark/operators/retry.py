@@ -8,6 +8,9 @@ analog around whole actions (a full-table write), where a transient
 driver-side failure (FS hiccup, metastore race) is worth one more try.
 
 UserExceptions never retry — bad config/data will not get better.
+ApplicationExceptions never retry either: they report an engine state a
+blind retry would make worse (catalog.replace_table raises one when a
+table swap failed after its new contents were written).
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import time
 from collections.abc import Callable
 from typing import TypeVar
 
-from db_writer_redshift_spark.config.errors import UserException
+from db_writer_redshift_spark.config.errors import ApplicationException, UserException
 
 logger = logging.getLogger("db_writer_redshift_spark")
 
@@ -39,8 +42,8 @@ def run_with_retry(
     for tries in range(1, attempts + 1):
         try:
             return fn()
-        except UserException:
-            raise  # user errors are deterministic — never retry
+        except (UserException, ApplicationException):
+            raise  # deterministic or unsafe to repeat — never retry
         except Exception as exc:  # noqa: BLE001
             last = exc
             if tries == attempts:

@@ -5,16 +5,25 @@ Reference lifecycle (RedshiftApplication.php:109-139):
 * ``loadFull``: drop → create → COPY. Destructive replace.
 * ``loadIncremental``: COPY into a fresh ``_temp_`` staging table → create
   target if missing → 3-statement upsert → drop staging. Non-atomic in the
-  reference; here the merged relation is computed functionally
-  (operators/merge.upsert_dataframes) and swapped in with one overwrite —
-  a crash mid-merge leaves the old target intact (documented improvement,
-  SURVEY.md §7 Phase 3).
+  reference.
 
-Scale: the overwrite writes through a checkpointed temp location because a
-Spark overwrite of a table being read would otherwise race with its own
-scan. At 100 TB the incremental path's cost is one PK-partitioned anti
-join (broadcast when staging is small) + a rewrite of the target —
-same order as Redshift's UPDATE+INSERT which also rewrites touched blocks.
+Here both modes compute the new contents as one relation (the merge is
+functional: operators/merge.upsert_dataframes) and publish it through
+``catalog.replace_table``: one write into a ``_temp_`` table in the final
+layout, then drop the target and rename the staging table onto it. A
+failure during the write leaves the old target intact and is retried
+(operators/retry.py). The drop→rename pair is the one non-atomic window,
+and it is metadata only: a failure there keeps the ``_temp_`` table, which
+holds the new contents, and fails the run with ApplicationException (CLI
+exit 2) instead of retrying into a target rebuilt from the increment
+alone. Full loads take the same path, so unlike the reference's
+drop → create → COPY they never expose a missing or half-written target
+while the data is written.
+
+Scale: each load writes its data once. At 100 TB the incremental path's
+cost is one PK-partitioned anti join (broadcast when staging is small) + a
+rewrite of the target — same order as Redshift's UPDATE+INSERT which also
+rewrites touched blocks.
 """
 
 from __future__ import annotations
@@ -26,49 +35,6 @@ from db_writer_redshift_spark.operators import catalog
 from db_writer_redshift_spark.operators.merge import upsert_dataframes
 
 
-def _write(
-    df: DataFrame,
-    name: str,
-    table: TableConfig,
-    buckets: int | None,
-    zorder_by: list[str] | None = None,
-    zorder_files: int | None = None,
-) -> None:
-    if buckets and zorder_by:
-        raise ValueError("buckets and zorder_by are mutually exclusive layouts")
-    if zorder_by:
-        # Morton-curve clustering (operators/zorder.py): range-partition +
-        # sort on the interleaved code so parquet footer stats prune on
-        # ANY clustered column. Same single shuffle as a sorted write.
-        # The partition count must be EXPLICIT — an unnumbered
-        # repartitionByRange is AQE-coalescible, which would collapse the
-        # layout into one file and erase the pruning benefit.
-        from db_writer_redshift_spark.operators.zorder import with_zorder
-
-        n = zorder_files or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        df = (
-            with_zorder(df, zorder_by)
-            .repartitionByRange(n, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    # Clear both the catalog entry AND the managed location first: the
-    # target may be an adopted location-based table (whose drop keeps
-    # files) or a bare orphan dir from a previous process — either makes
-    # saveAsTable fail with LOCATION_ALREADY_EXISTS.
-    catalog.drop_table(df.sparkSession, name)
-    w = df.write.mode("overwrite")
-    if buckets and table.primary_key:
-        # Hash-bucket + sort on the PK (the Spark analog of a Redshift
-        # DISTKEY/SORTKEY, which the reference never set): the next
-        # incremental merge's anti join reads co-located, pre-sorted
-        # buckets and skips the target-side shuffle entirely.
-        w = w.bucketBy(buckets, *table.primary_key).sortBy(*table.primary_key)
-    w.saveAsTable(name)
-
-
 def load_full(
     spark: SparkSession,
     table: TableConfig,
@@ -77,9 +43,21 @@ def load_full(
     zorder_by: list[str] | None = None,
     zorder_files: int | None = None,
 ) -> None:
-    """L-11: drop → create → write (overwrite semantics in one shot; the
-    drop happens inside _write, which also clears orphan locations)."""
-    _write(df, table.db_name, table, buckets, zorder_by, zorder_files)
+    """L-11: replace the target with ``df``.
+
+    ``buckets``: hash-bucket + sort on the primary key (see
+    catalog.replace_table). ``zorder_by``: Morton-curve clustering
+    (operators/zorder.py) into ``zorder_files`` files (default: the
+    session's shuffle width), so parquet footer stats prune on ANY
+    clustered column. The two layouts are mutually exclusive."""
+    if buckets and zorder_by:
+        raise ValueError("buckets and zorder_by are mutually exclusive layouts")
+    if zorder_by:
+        from db_writer_redshift_spark.operators.zorder import zorder_clustered
+
+        n = zorder_files or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        df = zorder_clustered(df, zorder_by, n)
+    catalog.replace_table(df, table.db_name, buckets, table.primary_key)
 
 
 def load_incremental(
@@ -91,20 +69,11 @@ def load_incremental(
     then upserts into the empty table, same result). PK-less → append
     (Redshift.php:169-200 guard via upsert_dataframes).
     """
-    if not catalog.table_exists(spark, table.db_name):
-        _write(staging, table.db_name, table, buckets)
-        return
-    target = spark.table(table.db_name)
-    merged = upsert_dataframes(target, staging, list(table.primary_key))
-    # Materialize before overwriting the table the plan reads from: stage
-    # into a _temp_ table (the reference's staging-table scheme, L-10),
-    # then swap. Two sequential jobs, no self-overwrite race.
-    tmp = catalog.generate_tmp_name(table.db_name)
-    merged.write.mode("overwrite").saveAsTable(tmp)
-    try:
-        _write(spark.table(tmp), table.db_name, table, buckets)
-    finally:
-        catalog.drop_table(spark, tmp)
+    merged = staging
+    if catalog.table_exists(spark, table.db_name):
+        target = spark.table(table.db_name)
+        merged = upsert_dataframes(target, staging, list(table.primary_key))
+    catalog.replace_table(merged, table.db_name, buckets, table.primary_key)
 
 
 def load_table(

@@ -121,6 +121,26 @@ def with_zorder(df: DataFrame, cols: list[str], bits: int = 16) -> DataFrame:
     return joined.withColumn("__z", z).drop(*drop)
 
 
+def zorder_clustered(
+    df: DataFrame,
+    cols: list[str],
+    num_files: int,
+    bits: int = 16,
+) -> DataFrame:
+    """``df`` clustered on the Morton code of ``cols``: range-partitioned
+    into ``num_files`` z-contiguous slices, sorted within each, helper
+    column dropped. One range shuffle — the same cost as a plain sorted
+    write — buying multi-column footer-stats pruning. The partition count
+    is explicit because an unnumbered repartitionByRange is
+    AQE-coalescible, which would collapse the layout into one file."""
+    return (
+        with_zorder(df, cols, bits)
+        .repartitionByRange(num_files, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+    )
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -128,18 +148,8 @@ def write_zordered(
     num_files: int,
     bits: int = 16,
 ) -> None:
-    """Write ``df`` as parquet clustered on the Morton code of ``cols``:
-    range-partition into ``num_files`` z-contiguous slices, sort within
-    each, drop the helper column. One range shuffle — the same cost as a
-    plain sorted write — buying multi-column footer-stats pruning."""
-    zdf = with_zorder(df, cols, bits)
-    (
-        zdf.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    """Write ``df`` as parquet in the :func:`zorder_clustered` layout."""
+    zorder_clustered(df, cols, num_files, bits).write.mode("overwrite").parquet(path)
 
 
 def file_minmax(path: str, column: str) -> list[tuple]:

@@ -301,22 +301,14 @@ def merge_sink(
         from db_writer_redshift_spark.operators import catalog
 
         spark = batch_df.sparkSession
-        if not catalog.table_exists(spark, table_name):
-            catalog.overwrite_table(batch_df, table_name)
-            return
-        target = spark.table(table_name)
-        merged = upsert_dataframes(target, batch_df.select(*target.columns), primary_key)
-        # Unique _temp_<hex> staging name: a crash between the staging
-        # write and the drop can't wedge the next batch (fresh name each
-        # time) and the leftover never surfaces in listings
-        # (catalog._TMP_NAME excludes the generate_tmp_name scheme);
-        # overwrite_table also pre-cleans the location either way.
-        tmp = catalog.generate_tmp_name(table_name)
-        catalog.overwrite_table(merged, tmp)
-        try:
-            catalog.overwrite_table(spark.table(tmp), table_name)
-        finally:
-            catalog.drop_table(spark, tmp)
+        merged = batch_df
+        if catalog.table_exists(spark, table_name):
+            target = spark.table(table_name)
+            merged = upsert_dataframes(target, batch_df.select(*target.columns), primary_key)
+        # Write-once rename swap: a fresh _temp_<hex> staging name per
+        # batch, so a crash's leftover can't wedge the next batch and never
+        # surfaces in listings (catalog._TMP_NAME excludes the scheme).
+        catalog.replace_table(merged, table_name)
 
     return (
         stream_df.writeStream.foreachBatch(process)
@@ -496,7 +488,8 @@ def scd2_sink(
     (duplicates within a batch collapse to the last occurrence — the
     merge dedupe rule); keys absent from a batch are LEFT OPEN, not
     deleted, because a delta stream never re-states the full dimension.
-    The swap-write pattern matches merge_sink.
+    Each batch replaces the table through catalog.replace_table, as in
+    merge_sink.
     """
     from db_writer_redshift_spark.operators.merge import dedupe_staging
     from db_writer_redshift_spark.operators.scd import scd2_apply, scd2_init
@@ -507,7 +500,7 @@ def scd2_sink(
         spark = batch_df.sparkSession
         batch = dedupe_staging(batch_df, keys)
         if not catalog.table_exists(spark, table_name):
-            catalog.overwrite_table(scd2_init(batch, ts=int(batch_id)), table_name)
+            catalog.replace_table(scd2_init(batch, ts=int(batch_id)), table_name)
             return
         history = spark.table(table_name)
         attr_cols = [
@@ -523,14 +516,9 @@ def scd2_sink(
             .join(batch.select(*keys), on=keys, how="left_anti")
             .unionByName(batch.select(*attr_cols))
         )
-        merged = scd2_apply(history, snapshot, keys, tracked, ts=int(batch_id))
-        # Crash-safe staging: see merge_sink.
-        tmp = catalog.generate_tmp_name(table_name)
-        catalog.overwrite_table(merged, tmp)
-        try:
-            catalog.overwrite_table(spark.table(tmp), table_name)
-        finally:
-            catalog.drop_table(spark, tmp)
+        catalog.replace_table(
+            scd2_apply(history, snapshot, keys, tracked, ts=int(batch_id)), table_name
+        )
 
     return (
         stream_df.writeStream.foreachBatch(process)
@@ -563,18 +551,12 @@ def incremental_agg_sink(
         from db_writer_redshift_spark.operators import catalog
 
         spark = batch_df.sparkSession
-        if not catalog.table_exists(spark, table_name):
-            catalog.overwrite_table(agg_state(batch_df, keys, state), table_name)
-            return
-        summary = spark.table(table_name)
-        refreshed = incremental_update(summary, batch_df, keys, state)
-        # Crash-safe staging: see merge_sink.
-        tmp = catalog.generate_tmp_name(table_name)
-        catalog.overwrite_table(refreshed, tmp)
-        try:
-            catalog.overwrite_table(spark.table(tmp), table_name)
-        finally:
-            catalog.drop_table(spark, tmp)
+        if catalog.table_exists(spark, table_name):
+            summary = spark.table(table_name)
+            refreshed = incremental_update(summary, batch_df, keys, state)
+        else:
+            refreshed = agg_state(batch_df, keys, state)
+        catalog.replace_table(refreshed, table_name)
 
     return (
         stream_df.writeStream.foreachBatch(process)
@@ -600,12 +582,13 @@ def cdc_retraction_agg_sink(
     safe, queryable mid-stream, one row per live group). Late deletes
     need no watermark: subtraction is exact whenever they arrive.
 
-    Same crash-safe staging discipline as incremental_agg_sink; replay
-    of an already-applied batch is NOT idempotent for multiplicities
-    (applying a delta twice double-counts), so the checkpoint's
-    exactly-once foreachBatch contract is the idempotency boundary —
-    documented here because the insert-only sinks tolerate replays that
-    this one must rely on the checkpoint to prevent."""
+    Each batch replaces the table through catalog.replace_table (one
+    write, then a metadata-only drop→rename), as in incremental_agg_sink;
+    replay of an already-applied batch is NOT idempotent for
+    multiplicities (applying a delta twice double-counts), so the
+    checkpoint's exactly-once foreachBatch contract is the idempotency
+    boundary — documented here because the insert-only sinks tolerate
+    replays that this one must rely on the checkpoint to prevent."""
     from db_writer_redshift_spark.operators.incremental import (
         apply_retraction_delta,
     )
@@ -615,8 +598,13 @@ def cdc_retraction_agg_sink(
         from pyspark.sql import functions as FF
 
         spark = batch_df.sparkSession
-        if not catalog.table_exists(spark, table_name):
-            empty = (
+        if catalog.table_exists(spark, table_name):
+            refreshed = apply_retraction_delta(
+                spark.table(table_name), batch_df, keys=keys, mult_col=mult_col,
+                sums=sums, count_col=count_col,
+            )
+        else:
+            refreshed = (
                 batch_df.groupBy(*keys)
                 .agg(
                     FF.sum(mult_col).cast("long").alias(count_col),
@@ -627,19 +615,7 @@ def cdc_retraction_agg_sink(
                 )
                 .filter(FF.col(count_col) > 0)
             )
-            catalog.overwrite_table(empty, table_name)
-            return
-        summary = spark.table(table_name)
-        refreshed = apply_retraction_delta(
-            summary, batch_df, keys=keys, mult_col=mult_col, sums=sums,
-            count_col=count_col,
-        )
-        tmp = catalog.generate_tmp_name(table_name)
-        catalog.overwrite_table(refreshed, tmp)
-        try:
-            catalog.overwrite_table(spark.table(tmp), table_name)
-        finally:
-            catalog.drop_table(spark, tmp)
+        catalog.replace_table(refreshed, table_name)
 
     return (
         stream_df.writeStream.foreachBatch(process)

@@ -41,7 +41,7 @@ def test_tiny_input_not_shredded_across_the_cluster(spark):
 
 def test_adaptive_target_scales_with_size_and_caps(spark):
     cap = spark.sparkContext.defaultParallelism
-    quarter = max(2, cap // 4)
+    quarter = min(cap, max(2, cap // 4))
     df = spark.range(quarter * DEFAULT_BYTES_PER_TASK // 8).coalesce(1)
     assert adaptive_partitions(df) == quarter
     huge = spark.range((cap * 100) * DEFAULT_BYTES_PER_TASK // 8)
@@ -61,7 +61,9 @@ def test_rows_preserved_exactly(spark):
     # row-preservation property is checked on the repartitioned path.
     df = spark.range(500).coalesce(1).select(F.col("id"))
     out = ensure_parallelism(df, bytes_per_task=64)
-    assert out.rdd.getNumPartitions() > 1
+    # lifted past one partition unless the cluster has only one core
+    cap = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() >= min(cap, 2)
     assert sorted(r.id for r in out.collect()) == list(range(500))
 
 

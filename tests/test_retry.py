@@ -1,11 +1,11 @@
 """Retry-executor tests (E-1 parity: 3 attempts, quadratic backoff,
-UserExceptions never retried)."""
+UserExceptions and ApplicationExceptions never retried)."""
 
 from __future__ import annotations
 
 import pytest
 
-from db_writer_redshift_spark.config.errors import UserException
+from db_writer_redshift_spark.config.errors import ApplicationException, UserException
 from db_writer_redshift_spark.operators.retry import retrying, run_with_retry
 
 
@@ -41,6 +41,20 @@ def test_user_exception_never_retries():
 
     with pytest.raises(UserException):
         run_with_retry(bad_config, sleep=lambda _: None)
+    assert calls["n"] == 1
+
+
+def test_application_exception_never_retries():
+    """A half-finished table swap must not be retried: the retry would
+    find no target and rebuild it from the increment alone."""
+    calls = {"n": 0}
+
+    def half_swapped():
+        calls["n"] += 1
+        raise ApplicationException('new contents kept in "t_temp_1"')
+
+    with pytest.raises(ApplicationException):
+        run_with_retry(half_swapped, sleep=lambda _: None)
     assert calls["n"] == 1
 
 

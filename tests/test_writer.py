@@ -151,6 +151,10 @@ def test_bucketed_merge_skips_target_shuffle(spark, data_path):
         assert len(re.findall("Exchange hashpartitioning", plan)) == 1  # staging only
         load_incremental(spark, t, stage, buckets=4)
         assert spark.table("bkt_t").count() == 12
+        # the swap's rename kept the bucket spec: the next merge still reads
+        # the replaced target bucketed
+        again = upsert_dataframes(spark.table("bkt_t"), stage, ["id"], dedupe=False)
+        assert "Bucketed: true" in again._jdf.queryExecution().executedPlan().toString()
     finally:
         for k, v in confs.items():
             spark.conf.set(k, v)
@@ -313,3 +317,138 @@ def test_show_tables_adopts_all_orphans(spark):
     finally:
         catalog.drop_table(spark, name)
     assert not os.path.exists(loc)
+
+
+def _cli_data_dir(path, data_path, csv_name, incremental):
+    """A CLI data dir loading ``csv_name`` into table ``fault_t``."""
+    import json
+    import shutil
+
+    items = [
+        {"name": "id", "dbName": "id", "type": "int"},
+        {"name": "name", "dbName": "name", "type": "nvarchar", "size": "255"},
+        {"name": "glasses", "dbName": "glasses", "type": "nvarchar", "size": "255"},
+    ]
+    raw = {
+        "parameters": {
+            "db": {"host": "local", "#password": "x", "user": "u", "database": "d"},
+            "tables": [
+                {
+                    "tableId": "simple", "dbName": "fault_t", "export": True,
+                    "incremental": incremental, "primaryKey": ["id"], "items": items,
+                }
+            ],
+        },
+        "storage": {
+            "input": {"tables": [{"source": "simple", "columns": ["id", "name", "glasses"]}]}
+        },
+    }
+    (path / "in" / "tables").mkdir(parents=True)
+    (path / "config.json").write_text(json.dumps(raw))
+    shutil.copy(data_path(csv_name), path / "in" / "tables" / "simple.csv")
+    return str(path)
+
+
+class _InjectedFault(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("step", ["write", "drop", "rename", "tmp_cleanup", "analyze"])
+def test_incremental_run_never_reports_success_over_lost_rows(
+    spark, tmp_path, data_path, monkeypatch, step
+):
+    """Writer fault injection: a full load, then an incremental CLI run
+    (with its retries) during which one catalog/storage step fails once:
+
+    * write       — the first data write into each table (every _temp_
+                    staging name counts as one table);
+    * drop        — the first drop of the target;
+    * rename      — the first ``ALTER TABLE … RENAME``;
+    * tmp_cleanup — the first drop of a _temp_ staging table;
+    * analyze     — the post-load ANALYZE.
+
+    Either the run succeeds and the target is the correct merge, or it
+    fails and the target is the old table, or absent with a kept _temp_
+    table that holds the correct merge and is named by the error. A
+    retry that finds the target gone and rebuilds it from the increment
+    alone (then reports success) is the data-loss this guards against."""
+    import functools
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from db_writer_redshift_spark import app as app_mod
+    from db_writer_redshift_spark.config.errors import ApplicationException
+    from db_writer_redshift_spark.operators.retry import run_with_retry
+
+    name = "fault_t"
+
+    def rows(tbl):
+        return {(r.id, r.name, r.glasses) for r in spark.table(tbl).collect()}
+
+    golden = {(r.id, r.name, r.glasses) for r in _read(spark, data_path, "simple_merged.csv").collect()}
+    full_dir = _cli_data_dir(tmp_path / "full", data_path, "simple.csv", False)
+    inc_dir = _cli_data_dir(tmp_path / "inc", data_path, "simple_increment.csv", True)
+
+    fired: set[str] = set()
+
+    def fault(key: str) -> None:
+        if key not in fired:
+            fired.add(key)
+            raise _InjectedFault(f"injected fault: {key}")
+
+    orig_save, orig_drop, orig_sql = DataFrameWriter.saveAsTable, catalog.drop_table, type(spark).sql
+
+    def save(self, tbl, *args, **kwargs):
+        if step == "write":
+            fault(re.sub(r"_temp_\w+", "_temp_", tbl))
+        return orig_save(self, tbl, *args, **kwargs)
+
+    def drop(session, tbl):
+        if (step == "drop" and tbl == name) or (step == "tmp_cleanup" and "_temp_" in tbl):
+            fault(step)
+        return orig_drop(session, tbl)
+
+    def sql(self, query, *args, **kwargs):
+        if step == "rename" and "RENAME TO" in query:
+            fault(step)
+        return orig_sql(self, query, *args, **kwargs)
+
+    def analyze(*args, **kwargs):
+        fault(step)
+
+    try:
+        assert app_mod.Application(full_dir, spark=spark).run()["status"] == "success"
+        old = rows(name)
+        sleeps: list[float] = []
+        monkeypatch.setattr(
+            app_mod, "run_with_retry", functools.partial(run_with_retry, sleep=sleeps.append)
+        )
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", save)
+        monkeypatch.setattr(catalog, "drop_table", drop)
+        monkeypatch.setattr(type(spark), "sql", sql)
+        if step == "analyze":
+            monkeypatch.setattr(catalog, "analyze_table", analyze)
+        error = None
+        try:
+            result = app_mod.Application(inc_dir, spark=spark).run()
+        except Exception as exc:  # noqa: BLE001
+            error = exc
+        monkeypatch.undo()
+        assert fired, f"the {step} fault never fired"
+        kept = [t.name for t in spark.catalog.listTables() if t.name.startswith(name + "_temp_")]
+        if error is None:
+            assert result == {"status": "success", "uploaded": ["simple"]}
+            assert rows(name) == golden
+        elif catalog.table_exists(spark, name):
+            assert rows(name) == old
+        else:
+            assert isinstance(error, ApplicationException), error
+            assert len(kept) == 1 and kept[0] in str(error)
+            assert rows(kept[0]) == golden
+    finally:
+        monkeypatch.undo()
+        for t in spark.catalog.listTables():
+            if t.name.startswith(name + "_temp_"):
+                catalog.drop_table(spark, t.name)
+        catalog.drop_table(spark, name)
