@@ -38,6 +38,7 @@ from db_writer_redshift_spark.config.schema import (
 from db_writer_redshift_spark.operators import writer as writer_ops
 from db_writer_redshift_spark.operators import catalog
 from db_writer_redshift_spark.operators.retry import run_with_retry
+from db_writer_redshift_spark.sources import csv_ingest
 from db_writer_redshift_spark.sources.csv_ingest import ingest_table
 from db_writer_redshift_spark.session import get_spark, test_connection
 
@@ -120,21 +121,34 @@ class Application:
                 manifest_path = cand
                 break
 
-        df = ingest_table(
-            self.spark,
-            table,
-            csv_path=None if manifest_path else csv_path,
-            manifest_path=manifest_path,
-        )
+        source = {
+            "csv_path": None if manifest_path else csv_path,
+            "manifest_path": manifest_path,
+        }
+        df = ingest_table(self.spark, table, **source)
         if df is None:  # empty sliced manifest → zero-row success (L-2)
             logger.info('Table "%s": empty manifest, nothing to load', table.table_id)
             return True
+
+        def load() -> None:
+            try:
+                writer_ops.load_table(self.spark, table, df)
+            except Exception as exc:
+                # a bad cell aborted the write before it committed (the
+                # target is untouched); like the reference reading
+                # stl_load_errors after a failed COPY, only now scan the
+                # source for the E-2 report
+                if not csv_ingest.is_bad_cell(exc):
+                    raise
+                raw = csv_ingest.read_source(self.spark, table, **source)
+                errors = csv_ingest.validate_load(raw, table)
+                if not errors:
+                    raise
+                raise csv_ingest.load_errors_to_exception(errors) from exc
+
         # E-1 analog: transient write failures get the reference's
         # 3-attempt quadratic-backoff retry (UserExceptions never retry).
-        run_with_retry(
-            lambda: writer_ops.load_table(self.spark, table, df),
-            what=f'write table "{table.table_id}"',
-        )
+        run_with_retry(load, what=f'write table "{table.table_id}"')
         # Redshift auto-ANALYZEs after COPY; mirror it with the cheap
         # metadata-only pass (size stats for the CBO, no data scan) —
         # best-effort: a stats failure must never fail a successful load

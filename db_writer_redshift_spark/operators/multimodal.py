@@ -211,8 +211,12 @@ def synthesize_png_media(
 
 # 31^k mod 2^31 power table for the vectorized checksum — extended on
 # demand and cached at module level (metadata, not results: the powers
-# depend only on the recurrence constant, never on any input data).
+# depend only on the recurrence constant, never on any input data). The
+# cache stops at _CHK_POWS_MAX entries; a longer payload extends a copy
+# that is dropped after the call, so a worker's memory does not grow to
+# its largest payload.
 _CHK_POWS = [1]
+_CHK_POWS_MAX = 1 << 16
 
 # Payload-size cutoff between the per-byte Python checksum loop and the
 # numpy closed form below. Measured crossover (round 9): tie at 100 B,
@@ -237,12 +241,13 @@ def _stub_checksum(payload: bytes) -> int:
         return checksum
     import numpy as np
 
-    while len(_CHK_POWS) < n:
-        _CHK_POWS.append((_CHK_POWS[-1] * 31) & 0x7FFFFFFF)
+    table = _CHK_POWS if n <= _CHK_POWS_MAX else list(_CHK_POWS)
+    while len(table) < n:
+        table.append((table[-1] * 31) & 0x7FFFFFFF)
     mod = np.uint64(1 << 31)
     b = np.frombuffer(payload, dtype=np.uint8).astype(np.uint64)
     idx = np.arange(n, dtype=np.uint64)
-    pows = np.array(_CHK_POWS[n - 1 :: -1], dtype=np.uint64)
+    pows = np.array(table[n - 1 :: -1], dtype=np.uint64)
     terms = ((b + idx) % mod) * pows % mod
     return int(terms.sum() % mod)
 

@@ -33,11 +33,12 @@ MAX_ATTEMPTS = 3  # Redshift.php:237 ($maxTries = 3)
 def run_with_retry(
     fn: Callable[[], T],
     attempts: int = MAX_ATTEMPTS,
-    sleep: Callable[[float], None] = time.sleep,
+    sleep: Callable[[float], None] | None = None,
     what: str = "action",
 ) -> T:
     """Call ``fn`` up to ``attempts`` times; quadratic backoff between
-    attempts (1s, 4s — Redshift.php:251 ``sleep(pow($tries, 2))``)."""
+    attempts (1s, 4s — Redshift.php:251 ``sleep(pow($tries, 2))``).
+    ``sleep`` defaults to ``time.sleep`` as looked up at call time."""
     last: Exception | None = None
     for tries in range(1, attempts + 1):
         try:
@@ -49,7 +50,7 @@ def run_with_retry(
             if tries == attempts:
                 break
             logger.warning("%s failed (attempt %d/%d): %s — retrying", what, tries, attempts, exc)
-            sleep(tries**2)
+            (sleep or time.sleep)(tries**2)
     assert last is not None
     raise last
 

@@ -12,7 +12,9 @@ functional: operators/merge.upsert_dataframes) and publish it through
 ``catalog.replace_table``: one write into a ``_temp_`` table in the final
 layout, then drop the target and rename the staging table onto it. A
 failure during the write leaves the old target intact and is retried
-(operators/retry.py). The drop→rename pair is the one non-atomic window,
+(operators/retry.py) — except a bad input cell, which the ingest guard
+raises inside this same write and app.Application turns into the E-2
+UserException, never retried. The drop→rename pair is the one non-atomic window,
 and it is metadata only: a failure there keeps the ``_temp_`` table, which
 holds the new contents, and fails the run with ApplicationException (CLI
 exit 2) instead of retrying into a target rebuilt from the increment

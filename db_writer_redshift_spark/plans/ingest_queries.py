@@ -31,11 +31,7 @@ from pyspark.sql import functions as F
 
 from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
 from db_writer_redshift_spark.plans.registry import load_table, register
-from db_writer_redshift_spark.sources import (
-    apply_schema,
-    read_table_xml,
-    validate_load,
-)
+from db_writer_redshift_spark.sources import guarded_schema, read_table_xml
 
 _XML_TABLE = TableConfig(
     table_id="orders_xml",
@@ -68,7 +64,7 @@ def ingest_xml_orders_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML ingest under the value-hash gate: a deterministic slice of
     orders renders to TWO XML files (the sliced-manifest shape — per-file
     line numbering exercised across files) with deliberately hostile
-    encoding choices, then read_table_xml + apply_schema reconstruct the
+    encoding choices, then read_table_xml + guarded_schema reconstruct the
     typed rows and the oracle recomputes them from the orders parquet
     directly. The render exercises every cast branch of the ingest
     contract:
@@ -82,10 +78,9 @@ def ingest_xml_orders_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``total`` renders as a 2-decimal string cast through
       decimal(12,2), emitted as exact cents.
 
-    validate_load runs on the raw frame and any load error fails the
-    query loudly (the reference's E-2 error contract is part of what is
-    being proven — a malformed render would surface as the golden
-    ``Column 'x', line N`` message, never a silent NULL)."""
+    guarded_schema rejects any uncastable cell: a malformed render
+    fails the query loudly when it runs (``BAD_CELL``), never as a
+    silent NULL. The guard adds no job to the plan build."""
     rows = sorted(
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 97 == 0)
@@ -125,11 +120,7 @@ def ingest_xml_orders_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         paths.append(p)
 
     raw = read_table_xml(spark, paths, _XML_TABLE)
-    errs = validate_load(raw, _XML_TABLE)
-    if errs:  # pragma: no cover - a render/reader bug, surfaced loudly
-        raise ValueError(f"XML ingest round trip produced load errors: "
-                         f"{[e.message() for e in errs]}")
-    typed = apply_schema(raw, _XML_TABLE)
+    typed = guarded_schema(raw, _XML_TABLE)
     return typed.select(
         "okey",
         "status",
@@ -225,11 +216,7 @@ def ingest_jsonl_orders_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from db_writer_redshift_spark.sources import read_table_jsonl
 
     raw = read_table_jsonl(spark, paths, _JSONL_TABLE)
-    errs = validate_load(raw, _JSONL_TABLE)
-    if errs:  # pragma: no cover - a render/reader bug, surfaced loudly
-        raise ValueError(f"JSONL ingest round trip produced load errors: "
-                         f"{[e.message() for e in errs]}")
-    typed = apply_schema(raw, _JSONL_TABLE)
+    typed = guarded_schema(raw, _JSONL_TABLE)
     return typed.select(
         "okey",
         "status",
@@ -336,11 +323,7 @@ def ingest_fixedwidth_orders_roundtrip(
     from db_writer_redshift_spark.sources import read_table_fixedwidth
 
     raw = read_table_fixedwidth(spark, paths, _FW_TABLE, _FW_WIDTHS)
-    errs = validate_load(raw, _FW_TABLE)
-    if errs:  # pragma: no cover - a render/reader bug, surfaced loudly
-        raise ValueError(f"fixed-width ingest round trip produced load "
-                         f"errors: {[e.message() for e in errs]}")
-    typed = apply_schema(raw, _FW_TABLE)
+    typed = guarded_schema(raw, _FW_TABLE)
     return typed.select(
         "okey",
         "status",

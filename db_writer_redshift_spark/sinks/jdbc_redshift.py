@@ -188,11 +188,8 @@ def run_statements(
     Redshift.php:237-253). ``run_sql(sql)`` executes one statement;
     ``reconnect()`` (optional) is invoked before a retry, mirroring the
     reference's connection re-establishment."""
-    import time as _time
-
     from db_writer_redshift_spark.operators.retry import run_with_retry
 
-    sleep = sleep or _time.sleep
     for sql in statements:
         state = {"first": True}
 

@@ -3,6 +3,7 @@
 from db_writer_redshift_spark.sources.csv_ingest import (  # noqa: F401
     LoadError,
     apply_schema,
+    guarded_schema,
     ingest_table,
     load_errors_to_exception,
     read_manifest_entries,

@@ -22,17 +22,24 @@ Spark mapping:
   headerless with schema from config.
 * TRUNCATECOLUMNS      → explicit ``substring(1, size)`` projection on
   sized string columns (L-4; no reader option exists).
-* ACCEPTANYDATE        → multi-pattern lenient parse (L-5) + a validation
-  pass producing the reference's error contract
+* ACCEPTANYDATE        → multi-pattern lenient parse (L-5). An uncastable
+  non-NULL cell rejects the load with the reference's error contract
   ``Column 'col', line N: reason`` (E-2; golden message asserted by the
   reference functional test: a short non-date string fails with
   "Invalid Date Format - length must be 10 or more").
 
+One pass, like COPY: :func:`ingest_table` is lazy, and every typed column
+carries a guard that raises :data:`BAD_CELL` when a non-NULL cell does not
+cast. The guard runs inside the load's own write, so a clean load parses
+each slice once and runs no validation job. Only a load that failed on
+the guard pays for :func:`validate_load`, a second scan that numbers the
+lines and collects the first errors — the reference reads
+``stl_load_errors`` the same way, after a COPY failed (Redshift.php:262-285).
+
 Scale notes: ``multiLine=True`` disables intra-file split parallelism
 (a quoted newline can straddle a split), exactly like Redshift's COPY of a
 single CSV — parallelism comes from slicing, which the manifest path gives
-us for free. The validation pass is one extra distributed scan, columnar
-and codegen'd, collecting only (up to) the first few error rows.
+us for free.
 """
 
 from __future__ import annotations
@@ -63,6 +70,11 @@ _TS_PATTERNS = (
 )
 
 _LINE_COL = "_load_line"
+
+#: Message of the guard that :func:`guarded_schema` puts on each typed
+#: column; a write that fails with it hit an uncastable cell
+#: (see :func:`is_bad_cell`).
+BAD_CELL = "uncastable non-NULL input cell"
 
 
 @dataclass(frozen=True)
@@ -133,8 +145,9 @@ def read_table_csv(
     # file a single partition, so this reconstructs file order). The
     # per-file partitioning keeps a sliced load's validation parallel —
     # a global orderBy window would funnel every slice through ONE
-    # reducer. Only materialized when validate_load needs line numbers
-    # (apply_schema prunes the column away).
+    # reducer. Only materialized when validate_load needs line numbers,
+    # which is on a failed load only (the typed projections prune the
+    # column, and the window with it).
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
@@ -315,11 +328,55 @@ def _cast_expr(item: ColumnItem) -> F.Column:
 
 def apply_schema(raw: DataFrame, table: TableConfig) -> DataFrame:
     """Project the raw string DataFrame to the declared schema:
-    drop ``ignore`` columns (L-16), rename to dbName, cast per type."""
+    drop ``ignore`` columns (L-16), rename to dbName, cast per type.
+    An uncastable cell reads as NULL (see :func:`guarded_schema`)."""
     exprs = [
         _cast_expr(item).alias(item.db_name) for item in table.effective_items
     ]
     return raw.select(*exprs)
+
+
+_STRINGY = {
+    "char",
+    "character",
+    "nchar",
+    "bpchar",
+    "varchar",
+    "character varying",
+    "nvarchar",
+    "text",
+}
+
+
+def _uncastable(item: ColumnItem) -> F.Column | None:
+    """The E-2 rejection predicate for one column: a non-NULL raw cell
+    whose typed value is NULL. None for string types, which always load
+    (truncation is silent, L-4)."""
+    if item.type in _STRINGY:
+        return None
+    return F.col(item.name).isNotNull() & _cast_expr(item).isNull()
+
+
+def guarded_schema(raw: DataFrame, table: TableConfig) -> DataFrame:
+    """:func:`apply_schema` whose typed columns reject bad cells: each
+    raises :data:`BAD_CELL` (``raise_error``) on a row where
+    :func:`_uncastable` holds, so the job that evaluates the relation —
+    the load's own write — fails instead of loading a NULL. Lazy: no job
+    runs here, and the line-number window is pruned away."""
+    exprs = []
+    for item in table.effective_items:
+        typed = _cast_expr(item)
+        failed = _uncastable(item)
+        if failed is not None:
+            typed = F.when(failed, F.raise_error(F.lit(BAD_CELL))).otherwise(typed)
+        exprs.append(typed.alias(item.db_name))
+    return raw.select(*exprs)
+
+
+def is_bad_cell(exc: BaseException) -> bool:
+    """Whether ``exc`` is a job failure raised by a :func:`guarded_schema`
+    guard (PySpark surfaces it as ``[USER_RAISED_EXCEPTION] <message>``)."""
+    return BAD_CELL in str(exc)
 
 
 def _error_reason(item: ColumnItem) -> F.Column:
@@ -340,19 +397,17 @@ def validate_load(raw: DataFrame, table: TableConfig, max_errors: int = 10) -> l
     """Distributed scan for uncastable non-NULL cells; returns up to
     ``max_errors`` :class:`LoadError` in line order (E-2 parity).
 
-    One pass over the data: each typed column contributes a
-    ``raw IS NOT NULL AND try_cast(raw) IS NULL`` predicate; a row failing
-    any predicate emits (column, line, raw, reason) structs that are
-    exploded and limited. All codegen'd — no Python in the row path.
+    One pass over the data: each typed column contributes its
+    :func:`_uncastable` predicate; a row failing any predicate emits
+    (column, line, raw, reason) structs that are exploded and limited.
+    All codegen'd — no Python in the row path.
     """
     checks = []
     for item in table.effective_items:
-        t = item.type
-        if t in _STRINGY:
-            continue  # strings always load (truncation is silent, L-4)
-        typed = _cast_expr(item)
+        failed = _uncastable(item)
+        if failed is None:
+            continue
         raw_col = F.col(item.name)
-        failed = raw_col.isNotNull() & typed.isNull()
         checks.append(
             F.when(
                 failed,
@@ -376,41 +431,28 @@ def validate_load(raw: DataFrame, table: TableConfig, max_errors: int = 10) -> l
     return [LoadError(r.column, r.line, r.raw_value, r.reason) for r in errs]
 
 
-_STRINGY = {
-    "char",
-    "character",
-    "nchar",
-    "bpchar",
-    "varchar",
-    "character varying",
-    "nvarchar",
-    "text",
-}
-
-
 def load_errors_to_exception(errors: list[LoadError]) -> UserException:
     """Format like the reference's errorsToException (Redshift.php:268-285)."""
     lines = "\n".join(e.message() for e in errors)
     return UserException(f"Failed to load data:\n{lines}")
 
 
-def ingest_table(
+def read_source(
     spark: SparkSession,
     table: TableConfig,
     csv_path: str | None = None,
     manifest_path: str | None = None,
     s3info: dict | None = None,
 ) -> DataFrame | None:
-    """Full COPY analog: resolve source (single file w/ header, or sliced
-    manifest), read, validate, cast. Returns None for an empty sliced
-    manifest (zero-row success short-circuit, Redshift.php:83-90).
+    """Resolve a load's source (single file with header, or sliced
+    manifest) to the raw string relation of :func:`read_table_csv`.
+    Returns None for an empty sliced manifest (zero-row success
+    short-circuit, Redshift.php:83-90).
 
     ``s3info`` is the reference's per-table S3 block (bucket / region /
     temporary credentials — Redshift.php:93-106); when present its STS
     credentials are wired onto the s3a connector for the bucket before
     any read (session.configure_s3).
-
-    Raises UserException with the E-2 message contract on bad cells.
     """
     if s3info:
         from db_writer_redshift_spark.session import configure_s3
@@ -420,17 +462,32 @@ def ingest_table(
         paths = read_manifest_entries(manifest_path)
         if not paths:
             return None
-        raw = read_table_csv(spark, paths, table, sliced=True)
-    elif csv_path is not None:
+        return read_table_csv(spark, paths, table, sliced=True)
+    if csv_path is not None:
         if not os.path.exists(csv_path):
             raise UserException(f"Source file not found: {csv_path}")
-        raw = read_table_csv(spark, csv_path, table, sliced=False)
-    else:
-        raise UserException("No csv_path or manifest_path given")
-    errors = validate_load(raw, table)
-    if errors:
-        raise load_errors_to_exception(errors)
-    return apply_schema(raw, table)
+        return read_table_csv(spark, csv_path, table, sliced=False)
+    raise UserException("No csv_path or manifest_path given")
+
+
+def ingest_table(
+    spark: SparkSession,
+    table: TableConfig,
+    csv_path: str | None = None,
+    manifest_path: str | None = None,
+    s3info: dict | None = None,
+) -> DataFrame | None:
+    """Full COPY analog, lazily: the typed relation of the source
+    (:func:`read_source`, same arguments) under :func:`guarded_schema`.
+    Runs no Spark job. Returns None for an empty sliced manifest.
+
+    A bad cell fails the job that evaluates the relation, with
+    :data:`BAD_CELL` (:func:`is_bad_cell`); that caller then runs
+    :func:`validate_load` on a fresh :func:`read_source` to raise the E-2
+    message (app.Application does, inside its load).
+    """
+    raw = read_source(spark, table, csv_path, manifest_path, s3info)
+    return None if raw is None else guarded_schema(raw, table)
 
 
 def read_table_orc(

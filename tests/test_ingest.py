@@ -109,12 +109,39 @@ def test_lenient_date_formats(spark, tmp_path):
     assert vals == {"2024-06-22"}  # ACCEPTANYDATE (L-5)
 
 
-def test_bad_date_error_message_golden(spark, data_path):
-    """E-2 contract: exact column/line/reason shape, 1-based data line."""
+def test_bad_date_error_message_golden(spark, data_path, tmp_path):
+    """E-2 contract: exact column/line/reason shape, 1-based data line.
+    ingest_table is lazy, so the load's own write is what rejects the
+    bad cell; the load then raises the E-2 message."""
+    import shutil
+
+    from db_writer_redshift_spark.app import Application
+    from db_writer_redshift_spark.operators import catalog
+
+    items = [
+        {"name": i.name, "dbName": i.db_name, "type": i.type, "size": i.size}
+        for i in BAD.items
+    ]
+    raw = {
+        "parameters": {
+            "db": {"host": "local", "#password": "x", "user": "u", "database": "d"},
+            "tables": [
+                {"tableId": "bad_type", "dbName": "bad_golden", "export": True,
+                 "primaryKey": ["id"], "items": items}
+            ],
+        },
+        "storage": {"input": {"tables": [
+            {"source": "bad_type", "columns": [i.name for i in BAD.items]}
+        ]}},
+    }
+    (tmp_path / "in" / "tables").mkdir(parents=True)
+    (tmp_path / "config.json").write_text(json.dumps(raw))
+    shutil.copy(data_path("bad_type.csv"), tmp_path / "in" / "tables" / "bad_type.csv")
     with pytest.raises(UserException) as err:
-        ingest_table(spark, BAD, csv_path=data_path("bad_type.csv"))
+        Application(str(tmp_path), spark=spark).run()
     msg = str(err.value)
     assert "Column 'created', line 3: Invalid Date Format - length must be 10 or more" in msg
+    assert not catalog.table_exists(spark, "bad_golden")
 
 
 def test_bad_int_reported_with_line(spark, tmp_path):

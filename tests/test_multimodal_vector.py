@@ -740,3 +740,18 @@ class TestDualPathWalkers:
             monkeypatch.setattr(multimodal, "_CHK_NP_MIN_BYTES", 0)
             c_np = multimodal._stub_checksum(payload)
             assert c_py == c_np, n
+
+    def test_stub_checksum_power_table_stays_bounded(self, monkeypatch):
+        """The cached 31^k table stops at _CHK_POWS_MAX entries: a longer
+        payload is checksummed from a throwaway extension, bit-equal to
+        the per-byte loop."""
+        monkeypatch.setattr(multimodal, "_CHK_POWS", [1])
+        monkeypatch.setattr(multimodal, "_CHK_POWS_MAX", 1000)
+        monkeypatch.setattr(multimodal, "_CHK_NP_MIN_BYTES", 0)
+        for n, cached in ((600, 600), (5000, 600), (800, 800), (1001, 800)):
+            payload = bytes((k * 7 + 3) % 256 for k in range(n))
+            want = 0
+            for i, byte in enumerate(payload):
+                want = (want * 31 + byte + i) % (1 << 31)
+            assert multimodal._stub_checksum(payload) == want, n
+            assert len(multimodal._CHK_POWS) == cached, n

@@ -24,6 +24,27 @@ def test_succeeds_after_transient_failures():
     assert sleeps == [1, 4]  # sleep(tries**2), Redshift.php:251
 
 
+def test_default_backoff_is_time_sleep_looked_up_at_call_time(monkeypatch):
+    """Patching ``time.sleep`` replaces the 1 s / 4 s backoff: the default
+    is not bound when the module is imported."""
+    import time
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    calls = {"n": 0}
+
+    def flaky():
+        calls["n"] += 1
+        if calls["n"] < 3:
+            raise RuntimeError("transient")
+        return "ok"
+
+    t0 = time.perf_counter()
+    assert run_with_retry(flaky) == "ok"
+    assert sleeps == [1, 4]
+    assert time.perf_counter() - t0 < 1.0
+
+
 def test_exhaustion_reraises_last_error():
     def always():
         raise RuntimeError("boom")

@@ -319,33 +319,35 @@ def test_show_tables_adopts_all_orphans(spark):
     assert not os.path.exists(loc)
 
 
-def _cli_data_dir(path, data_path, csv_name, incremental):
-    """A CLI data dir loading ``csv_name`` into table ``fault_t``."""
+_SIMPLE_ITEMS = [
+    {"name": "id", "dbName": "id", "type": "int"},
+    {"name": "name", "dbName": "name", "type": "nvarchar", "size": "255"},
+    {"name": "glasses", "dbName": "glasses", "type": "nvarchar", "size": "255"},
+]
+
+
+def _cli_data_dir(path, src_csv, incremental, items=_SIMPLE_ITEMS, db_name="fault_t"):
+    """A CLI data dir loading the CSV file ``src_csv`` into ``db_name``."""
     import json
     import shutil
 
-    items = [
-        {"name": "id", "dbName": "id", "type": "int"},
-        {"name": "name", "dbName": "name", "type": "nvarchar", "size": "255"},
-        {"name": "glasses", "dbName": "glasses", "type": "nvarchar", "size": "255"},
-    ]
     raw = {
         "parameters": {
             "db": {"host": "local", "#password": "x", "user": "u", "database": "d"},
             "tables": [
                 {
-                    "tableId": "simple", "dbName": "fault_t", "export": True,
+                    "tableId": "simple", "dbName": db_name, "export": True,
                     "incremental": incremental, "primaryKey": ["id"], "items": items,
                 }
             ],
         },
         "storage": {
-            "input": {"tables": [{"source": "simple", "columns": ["id", "name", "glasses"]}]}
+            "input": {"tables": [{"source": "simple", "columns": [i["name"] for i in items]}]}
         },
     }
     (path / "in" / "tables").mkdir(parents=True)
     (path / "config.json").write_text(json.dumps(raw))
-    shutil.copy(data_path(csv_name), path / "in" / "tables" / "simple.csv")
+    shutil.copy(src_csv, path / "in" / "tables" / "simple.csv")
     return str(path)
 
 
@@ -387,8 +389,8 @@ def test_incremental_run_never_reports_success_over_lost_rows(
         return {(r.id, r.name, r.glasses) for r in spark.table(tbl).collect()}
 
     golden = {(r.id, r.name, r.glasses) for r in _read(spark, data_path, "simple_merged.csv").collect()}
-    full_dir = _cli_data_dir(tmp_path / "full", data_path, "simple.csv", False)
-    inc_dir = _cli_data_dir(tmp_path / "inc", data_path, "simple_increment.csv", True)
+    full_dir = _cli_data_dir(tmp_path / "full", data_path("simple.csv"), False)
+    inc_dir = _cli_data_dir(tmp_path / "inc", data_path("simple_increment.csv"), True)
 
     fired: set[str] = set()
 
@@ -451,4 +453,95 @@ def test_incremental_run_never_reports_success_over_lost_rows(
         for t in spark.catalog.listTables():
             if t.name.startswith(name + "_temp_"):
                 catalog.drop_table(spark, t.name)
+        catalog.drop_table(spark, name)
+
+
+_N_TABLE = TableConfig(
+    table_id="simple",
+    db_name="badcell_t",
+    items=(
+        ColumnItem("id", "id", "int"),
+        ColumnItem("name", "name", "nvarchar", "255"),
+        ColumnItem("n", "n", "int"),
+    ),
+    primary_key=("id",),
+)
+
+
+def test_ingest_table_launches_no_spark_job(spark, tmp_path):
+    """ingest_table only plans: the bad-cell guard and the parse run
+    inside the load's own write, so building the typed relation starts
+    no job (no validation scan, no line-number window)."""
+    src = tmp_path / "t.csv"
+    src.write_text("id,name,n\n1,a,10\n2,b,zz\n")
+    tracker = spark.sparkContext.statusTracker()
+    group = "ingest_table_is_lazy"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        before = len(tracker.getJobIdsForGroup(group))
+        df = ingest_table(spark, _N_TABLE, csv_path=str(src))
+        after = len(tracker.getJobIdsForGroup(group))
+        assert df.columns == ["id", "name", "n"]
+        assert (before, after) == (0, 0)
+        assert df.filter("id = 1").count() == 1
+        assert len(tracker.getJobIdsForGroup(group)) > 0  # the tracker sees jobs
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            spark.sparkContext.setLocalProperty(key, None)
+
+
+def test_bad_cell_in_increment_rejects_load_and_keeps_target(
+    spark, tmp_path, monkeypatch
+):
+    """E-2 on the incremental path: the bad cell sits in a row that a
+    later row with the same key supersedes, so the merge's dedupe drops
+    it — the load must still be rejected (COPY rejects the file before
+    any merge), with the exact E-2 line, the old target kept, no
+    staging table or directory left, and no retry."""
+    import functools
+    import os
+
+    from db_writer_redshift_spark import app as app_mod
+    from db_writer_redshift_spark.config.errors import UserException
+    from db_writer_redshift_spark.operators.retry import run_with_retry
+
+    name = _N_TABLE.db_name
+    full_csv = tmp_path / "full.csv"
+    full_csv.write_text("id,name,n\n1,a,10\n2,b,20\n3,c,30\n")
+    inc_csv = tmp_path / "inc.csv"
+    inc_csv.write_text("id,name,n\n4,d,40\n2,x,zz\n2,y,21\n")
+    items = [
+        {"name": i.name, "dbName": i.db_name, "type": i.type, "size": i.size}
+        for i in _N_TABLE.items
+    ]
+    full_dir = _cli_data_dir(tmp_path / "full", full_csv, False, items, name)
+    inc_dir = _cli_data_dir(tmp_path / "inc", inc_csv, True, items, name)
+
+    def rows():
+        return sorted(tuple(r) for r in spark.table(name).collect())
+
+    def leftovers():
+        wh = catalog._managed_location(spark, name).replace("file:", "").rsplit("/", 1)[0]
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith(name + "_temp_")] + [
+            d for d in os.listdir(wh) if d.startswith(name + "_temp_")
+        ]
+
+    try:
+        assert app_mod.Application(full_dir, spark=spark).run()["status"] == "success"
+        old = rows()
+        assert old == [(1, "a", 10), (2, "b", 20), (3, "c", 30)]
+        sleeps: list[float] = []
+        monkeypatch.setattr(
+            app_mod, "run_with_retry", functools.partial(run_with_retry, sleep=sleeps.append)
+        )
+        with pytest.raises(UserException) as err:
+            app_mod.Application(inc_dir, spark=spark).run()
+        assert str(err.value) == (
+            "Failed to load data:\nColumn 'n', line 2: Cannot cast value 'zz' to type int"
+        )
+        assert rows() == old
+        assert leftovers() == []
+        assert sleeps == []
+    finally:
+        monkeypatch.undo()
         catalog.drop_table(spark, name)
