@@ -13,7 +13,7 @@ Spark shape per Lloyd iteration:
      (the same kernel plans/llm_ops.kmeans_assign_stats proves
      oracle-exact against DuckDB);
   2. update — per-centroid mean vector via ONE aggregate with dim flat
-     SUM columns (the same flat-projection trick minhash_signatures
+     SUM columns (the same flat-aggregate trick minhash_signatures
      uses): partials combine map-side, so the shuffle carries
      ~(#map partitions × k) rows of dim doubles regardless of corpus
      size; the k-row result collects to the driver for the division.

@@ -183,17 +183,21 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, signature: array<bigint>[num_hashes]) per document.
 
-    Plan shape: explode distinct shingle hashes → num_hashes flat affine
-    projections ((a_i*h+b_i) mod p; a,h < 2^31 so the products stay under
-    2^62 — ANSI-overflow-safe) → one groupBy(doc_id) with num_hashes MIN
-    aggregates → assemble the array. Partial aggregation runs map-side, so
-    the shuffle carries one num_hashes-wide row per doc per map partition
-    — NOT per shingle.
+    Plan shape: explode distinct shingle hashes → one groupBy(doc_id)
+    whose single aggregate expression is
+    ``array(min((a_0*h+b_0) mod p), …, min((a_{k-1}*h+b_{k-1}) mod p))``
+    (a,h < 2^31 so the products stay under 2^62 — ANSI-overflow-safe).
+    Partial aggregation runs map-side, so the shuffle carries one
+    num_hashes-wide row per doc per map partition — NOT per shingle.
 
-    (A previous formulation used num_hashes nested array_min/transform
-    lambdas over the shingle array; the codegen'd expression tree was
-    megabytes and dominated runtime. Flat projections + min aggs are the
-    scale path.)
+    The aggregate is one SQL expression rather than num_hashes projected
+    columns, num_hashes ``F.min`` columns and an ``F.array``: each of
+    those Column objects costs py4j round trips while the plan is built
+    (about 2,200 per build, measured with call-site capture off), and the
+    executed work is the same per-row affine maps feeding MIN aggregates.
+    (A still older formulation used
+    num_hashes nested array_min/transform lambdas over the shingle array;
+    the codegen'd expression tree was megabytes and dominated runtime.)
 
     The default tier never MATERIALIZES gram strings: each token is
     xxhash64'd once, and a shingle's base hash is xxhash64 over its n
@@ -211,12 +215,12 @@ def minhash_signatures(
     (query ``dedup_minhash_portable``).
     """
     params = _hash_params(num_hashes, seed)
-    # Shingle explode + 64 projections is the CPU-heavy stage — make sure it
+    # Shingle explode + 64 affine MINs is the CPU-heavy stage — make sure it
     # runs at cluster parallelism even when the scan yields few partitions
     # (single-row-group parquet; a handful of gzip slices). 2.4× on the
     # one-row-group fixture; no-op on a many-split layout. Keyed on
     # doc_id so the 64-min groupBy reuses this exchange instead of
-    # re-shuffling the exploded 64-column relation (~30% on the sf0.1
+    # re-shuffling the exploded relation (~30% on the sf0.1
     # signature stage).
     base = ensure_parallelism(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")),
@@ -253,18 +257,11 @@ def minhash_signatures(
             ).alias("sh"),
         )
         h = F.pmod(F.col("sh"), F.lit(_MERSENNE_P))
-    projected = exploded.select(
-        "doc_id",
-        *[
-            ((F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_P)).alias(f"h{i}")
-            for i, (a, b) in enumerate(params)
-        ],
-    )
-    agg = projected.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)]
-    )
-    return agg.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("signature")
+    mins = ", ".join(f"min(({a} * __h + {b}) % {_MERSENNE_P})" for a, b in params)
+    return (
+        exploded.select("doc_id", h.alias("__h"))
+        .groupBy("doc_id")
+        .agg(F.expr(f"array({mins})").alias("signature"))
     )
 
 

@@ -113,7 +113,11 @@ def hits_int(
     # 6·iterations-ish stages downstream inherits this partition count,
     # so a constant cluster-width split of a small ids-only relation
     # multiplies per-task fixed costs across the whole round structure.
-    # Capped at the cluster parallelism — at-scale behavior unchanged.
+    # Capped at sparkContext.defaultParallelism (adaptive_partitions), NOT
+    # at spark.sql.shuffle.partitions: where the shuffle width is set
+    # larger than the core count, the edge layouts and every stage that
+    # inherits them stay at the core count, narrower than the engine's
+    # other exchanges.
     from db_writer_redshift_spark.operators.partitioning import adaptive_partitions
 
     nparts = adaptive_partitions(e)

@@ -11,6 +11,16 @@ settings every other module assumes:
   100 TB runs; harmless locally.
 * shuffle.partitions sized from the env (local[32] default 32; a real
   cluster overrides via spark-submit conf).
+* DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark wraps every ``F.*``/``Column`` call with about five extra py4j
+  round trips (active session, conf read, origin set/clear), a stack walk
+  and a failing ``import IPython`` that searches every ``sys.path`` entry.
+  Building the MinHash-LSH plan took about 7,600 round trips with it on.
+  The cost of turning it off is that error messages no longer name the
+  Python line that built the failing expression; pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to ``get_spark`` to get it back.
 """
 
 from __future__ import annotations
@@ -34,8 +44,15 @@ def get_spark(
     When a session already exists (driver harness, pytest fixture) we return
     it untouched except for session-scoped confs that are safe to set late
     (timezone, AQE, Arrow).
+
+    Call-site capture is switched off before ``extra_conf`` is applied, so
+    ``extra_conf`` can switch it back on (see the module docstring). It is
+    a static conf: on an already-running session it keeps the value that
+    session was built with.
     """
-    builder = SparkSession.builder.appName(app_name)
+    builder = SparkSession.builder.appName(app_name).config(
+        "spark.python.sql.dataFrameDebugging.enabled", "false"
+    )
     if master:
         builder = builder.master(master)
     if warehouse_dir:
@@ -94,7 +111,14 @@ def get_spark(
 
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Pin the confs the engine relies on onto a session built elsewhere
-    (e.g. the driver harness passes its own SparkSession into ``entry``)."""
+    (e.g. the driver harness passes its own SparkSession into ``entry``).
+
+    Call-site capture (see the module docstring) is NOT switched off here:
+    ``spark.python.sql.dataFrameDebugging.enabled`` is a static conf, so
+    ``spark.conf.set`` rejects it (CANNOT_MODIFY_STATIC_CONFIG) once the
+    session exists, and PySpark also caches the flag per process on the
+    first ``Column`` call. A session built elsewhere keeps the value its
+    builder gave it."""
     for k, v in {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",

@@ -166,6 +166,58 @@ def test_minhash_portable_same_fidelity_contract(spark, docs):
             assert abs(est[p] - j) <= 0.25, (p, est[p], j)
 
 
+@pytest.mark.parametrize("portable", [False, True])
+def test_minhash_signature_aggregate_matches_per_column_reference(spark, docs, portable):
+    """The one-expression signature aggregate returns bit-identical rows to
+    the per-hash formulation it replaced: num_hashes projected columns,
+    num_hashes F.min aggregates, then F.array."""
+    from pyspark.sql import functions as F
+
+    num_hashes, n, seed = 64, 3, 42
+    params = dedup._hash_params(num_hashes, seed)
+    p = F.lit(dedup._MERSENNE_P)
+    if portable:
+        exploded = docs.select(
+            "doc_id", F.explode(F.array_distinct(dedup.shingles(F.col("text"), n))).alias("sh")
+        )
+        h = dedup._portable_base_hash(F.col("sh"))
+    else:
+        mix = ", ".join(f"__th[i + {j} - 1]" for j in range(n))
+        exploded = docs.select(
+            "doc_id",
+            F.transform(
+                F.split(F.col("text"), " "), lambda tok: F.xxhash64(tok, F.lit(seed))
+            ).alias("__th"),
+        ).select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(
+                    F.expr(
+                        f"CASE WHEN size(__th) >= {n} THEN"
+                        f" transform(sequence(1, size(__th) - {n} + 1),"
+                        f" i -> xxhash64({mix}))"
+                        " ELSE cast(array() as array<bigint>) END"
+                    )
+                )
+            ).alias("sh"),
+        )
+        h = F.pmod(F.col("sh"), p)
+    reference = (
+        exploded.select(
+            "doc_id",
+            *[((F.lit(a) * h + F.lit(b)) % p).alias(f"h{i}") for i, (a, b) in enumerate(params)],
+        )
+        .groupBy("doc_id")
+        .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)])
+        .select("doc_id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("signature"))
+    )
+    got = dedup.minhash_signatures(docs, "doc_id", "text", n, num_hashes, seed, portable)
+    assert got.schema == reference.schema
+    want = sorted(reference.collect())
+    assert len(want) > 0
+    assert sorted(got.collect()) == want
+
+
 def test_simhash_portable_same_contract(spark):
     base = "the quick brown fox jumps over the lazy dog again and again " * 5
     df = spark.createDataFrame(

@@ -99,7 +99,11 @@ def test_aqe_splits_skewed_join_partition(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
 
-        big = spark.range(0, 300_000).select(
+        # AQE splits a skewed reduce partition along map-output
+        # boundaries, so the skewed side needs several map tasks. An
+        # explicit split count keeps that true when defaultParallelism
+        # is 1, where spark.range would otherwise yield one partition.
+        big = spark.range(0, 300_000, numPartitions=8).select(
             F.when(F.col("id") % 20 != 0, 7)
             .otherwise(F.col("id") % 97)
             .alias("k"),
