@@ -29,8 +29,6 @@ inspection only — no job is triggered.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # Estimated input bytes each rescued/pinned task should carry, by kernel
@@ -41,19 +39,12 @@ from pyspark.sql import DataFrame
 # spots (single-digit task counts; 32-way splits of these inputs measured
 # 3-4.6x MORE total executor CPU from per-task contention than 8-way for
 # identical work) while any real dataset still saturates the parallelism
-# cap. Env-overridable for cluster tuning like the AQE knobs in
-# session.py.
-DEFAULT_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_RESCUE_BYTES_PER_TASK", str(256 * 1024))
-)
+# cap.
+DEFAULT_BYTES_PER_TASK = 256 * 1024
 # Shingle/token/hash explodes: ~100x a scan's CPU per byte.
-TEXT_KERNEL_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_RESCUE_TEXT_BPT", str(32 * 1024))
-)
+TEXT_KERNEL_BYTES_PER_TASK = 32 * 1024
 # Per-pixel/per-sample Python decode (PNG defilter, ADPCM): ~1000x.
-DECODE_KERNEL_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_RESCUE_DECODE_BPT", str(4 * 1024))
-)
+DECODE_KERNEL_BYTES_PER_TASK = 4 * 1024
 
 
 def _estimated_size_bytes(df: DataFrame) -> int | None:

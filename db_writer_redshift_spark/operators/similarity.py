@@ -17,14 +17,11 @@ to brute force. Every LSH algorithm is ONE plan parameterized by a bucket
 KERNEL (a Column → array<bigint> of per-table bucket ids): _bands →
 _lsh_candidates (band join, pair filter, pinned repartition, dedup) →
 _refine (exact cosine rejoin) → _top_k for the k-NN forms. Margin mining
-keeps the candidates but refines with exact integer dots. Two kernels:
-
-  * _bucket_udf — float hyperplanes, one Arrow-batched numpy GEMM per
-    batch: the default tier (lsh_topk, lsh_dup_pairs).
-  * _int_bucket_udf — hyperplanes quantized to exact integers
-    (quantized_planes), one int64 einsum per batch: bucket ids reproduce
-    bit-identically in DuckDB SQL, so the *_portable tiers carry full
-    oracles.
+keeps the candidates but refines with exact integer dots. There is one
+kernel, _int_bucket_udf: hyperplanes quantized to exact integers
+(quantized_planes), one int64 einsum per Arrow batch. Its bucket ids
+reproduce bit-identically in DuckDB SQL, so every LSH query carries a full
+oracle.
 
 Hyperplanes are generated from a fixed seed with numpy and shipped in the
 kernel's closure (they are tiny: L×H×dim numbers) — deterministic, no RNG
@@ -195,40 +192,6 @@ def cosine_dup_pairs(
     )
 
 
-def _hyperplanes(dim: int, num_planes: int, num_tables: int, seed: int) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.normal(size=(num_tables, num_planes, dim)).astype(float)
-
-
-def _bucket_udf(dim: int, num_planes: int, num_tables: int, seed: int) -> _BucketKernel:
-    """The float bucket kernel: all-tables bucket ids per vector as ONE
-    Arrow-batched matmul.
-
-    sign(V·Pᵀ) for every (table, plane) at once — an (batch × dim) @
-    (dim × tables·planes) numpy matmul — then pack the sign bits into one
-    long per table. The expression-tree formulation of the same thing
-    (num_tables × num_planes fold-dots as nested higher-order functions)
-    generates megabytes of codegen and dominated runtime; a vectorized
-    matmul is the genuinely-faster path, exactly the "built-ins can't
-    express it efficiently" carve-out. Per-row results are independent of
-    batching/partitioning, so bucket assignment stays deterministic."""
-    planes = _hyperplanes(dim, num_planes, num_tables, seed)
-    flat = planes.reshape(num_tables * num_planes, dim).T.copy()  # dim × (t·p)
-    weights = (1 << np.arange(num_planes, dtype=np.int64))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.array(v.tolist(), dtype=np.float64)  # batch × dim
-        signs = (mat @ flat) >= 0.0  # batch × (tables·planes)
-        signs = signs.reshape(len(mat), num_tables, num_planes)
-        ids = (signs * weights).sum(axis=2)  # batch × tables
-        return pd.Series(list(ids))
-
-    return buckets
-
-
 def quantized_planes(
     dim: int = 64,
     num_planes: int = 4,
@@ -236,12 +199,13 @@ def quantized_planes(
     seed: int = 42,
     scale: int = 1000,
 ) -> list[list[list[int]]]:
-    """The LSH hyperplanes quantized to exact integers (×scale, rounded):
-    sign(Σ eᵢ·pᵢ) over INTEGER terms is accumulation-order-independent, so
-    the bucket assignment reproduces bit-identically in any engine — the
-    portability trick behind the *_portable LSH tiers. Quantizing a random
-    projection just yields a slightly different (equally random) plane."""
-    planes = _hyperplanes(dim, num_planes, num_tables, seed)
+    """The LSH hyperplanes — seeded standard-normal draws — quantized to
+    exact integers (×scale, rounded): sign(Σ eᵢ·pᵢ) over INTEGER terms is
+    accumulation-order-independent, so the bucket assignment reproduces
+    bit-identically in any engine, DuckDB oracles included. Quantizing a
+    random projection just yields a slightly different (equally random)
+    plane."""
+    planes = np.random.RandomState(seed).normal(size=(num_tables, num_planes, dim))
     q = np.round(planes * scale).astype(np.int64)
     return [[[int(v) for v in p] for p in tbl] for tbl in q]
 
@@ -249,7 +213,7 @@ def quantized_planes(
 def _int_bucket_udf(
     dim: int, num_planes: int, num_tables: int, seed: int, scale: int
 ) -> _BucketKernel:
-    """The portable bucket kernel: per-table bucket ids via exact-integer
+    """The bucket kernel: per-table bucket ids via exact-integer
     plane dots (see quantized_planes) — the vector quantized ×scale,
     packed sign bits of its dots with the quantized planes.
 
@@ -260,7 +224,7 @@ def _int_bucket_udf(
     tables×planes×dim literal tree that Catalyst evaluated interpreted —
     measured 12.5s for 1k vectors at (16,4,64); the einsum is
     milliseconds. Bit-for-bit oracle parity is unchanged (re-certified
-    portable tiers at sf0.001/0.01/0.1)."""
+    at sf0.001/0.01/0.1)."""
     flat = np.asarray(
         quantized_planes(dim, num_planes, num_tables, seed, scale), dtype=np.int64
     )  # tables × planes × dim
@@ -270,6 +234,8 @@ def _int_bucket_udf(
     def bucket_ids(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
+        # float32 embeddings widen to float64 here, exactly as a Spark
+        # cast would, so only the narrow array crosses the Arrow boundary
         x = np.array(v.tolist(), dtype=np.float64) * scale
         # Spark/DuckDB ROUND = half away from zero evaluated on the exact
         # float64 value. floor(x+0.5) alone overshoots when x+0.5 rounds UP
@@ -286,7 +252,7 @@ def _int_bucket_udf(
         ids = ((dots >= 0) * weights).sum(axis=2)  # batch × tables
         return pd.Series(list(ids))
 
-    return lambda vec: bucket_ids(vec.cast("array<double>"))
+    return bucket_ids
 
 
 def _lsh_dup_pairs(
@@ -360,6 +326,7 @@ def lsh_dup_pairs(
     num_planes: int = 4,
     num_tables: int = 16,
     seed: int = 42,
+    scale: int = 1000,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via LSH blocking — the scale path for
     ``cosine_dup_pairs`` (which stays the exact all-pairs oracle baseline).
@@ -370,39 +337,17 @@ def lsh_dup_pairs(
     a bit-identical score) and the ≥ threshold filter. Output schema equals
     cosine_dup_pairs: (id_a, id_b, cosine_sim).
 
-    Plan shape at 100 TB: bucket assignment is one Arrow-batched GEMM per
-    batch (no shuffle); the self-join keys on (table, bucket) and carries
-    ids only — ~N·L narrow rows through the shuffle instead of N² pairs;
-    vectors rejoin for the candidate set only. Recall is the hyperplane
-    collision bound 1−(1−p^b)^L with p = 1−θ/π, tuned by (num_planes,
-    num_tables) and measured against the exact baseline in
+    Bucketing is exact-integer: embeddings and hyperplanes quantize to
+    ×scale integers, so every candidate and every refined cosine is
+    reproducible in DuckDB SQL (query dedup_embedding_lsh).
+
+    Plan shape at 100 TB: bucket assignment is one Arrow-batched int64
+    einsum per batch (no shuffle); the self-join keys on (table, bucket)
+    and carries ids only — ~N·L narrow rows through the shuffle instead of
+    N² pairs; vectors rejoin for the candidate set only. Recall is the
+    hyperplane collision bound 1−(1−p^b)^L with p = 1−θ/π, tuned by
+    (num_planes, num_tables) and measured against the exact baseline in
     tests/test_similarity.py."""
-    return _lsh_dup_pairs(
-        df, id_col, vec_col, threshold, _bucket_udf(dim, num_planes, num_tables, seed)
-    )
-
-
-def lsh_dup_pairs_portable(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    dim: int = 64,
-    num_planes: int = 4,
-    num_tables: int = 16,
-    seed: int = 42,
-    scale: int = 1000,
-) -> DataFrame:
-    """lsh_dup_pairs with EXACT-integer bucketing instead of the numpy
-    GEMM: embeddings and hyperplanes quantize to ×scale integers, plane
-    dots become order-independent integer dots, and the bucket id is the
-    packed sign-bit sum — every candidate and every refined cosine is
-    reproducible in DuckDB SQL (query dedup_embedding_lsh_portable).
-
-    Same plan as lsh_dup_pairs; only the bucket kernel differs. The
-    integer kernel is an int64 einsum per Arrow batch (_int_bucket_udf),
-    plus the per-element quantization the float kernel skips.
-    """
     return _lsh_dup_pairs(
         df,
         id_col,
@@ -422,12 +367,15 @@ def lsh_topk(
     num_planes: int = 4,
     num_tables: int = 16,
     seed: int = 42,
+    scale: int = 1000,
 ) -> DataFrame:
     """ANN top-k via random-hyperplane LSH + exact re-rank of candidates.
 
     Same output schema as brute_force_topk; approximate (recall checked in
     tests). The bucket join keys on (table, bucket) — at scale the shuffle
-    moves only bucket-collided pairs.
+    moves only bucket-collided pairs. Buckets are exact-integer
+    quantized-plane signs, bit-identical cross-engine, so the whole tier
+    is oracle-checkable (query ann_lsh_topk).
 
     Defaults (4 bits × 16 tables → recall@5 ≈ 0.9 on the fixture corpus,
     whose top-5 neighbors sit at modest cosine ~0.4) trade candidate-set
@@ -435,27 +383,6 @@ def lsh_topk(
     buckets, ~N/2^planes candidates per table) and re-measure recall —
     the (planes, tables) pair IS the cost/recall dial.
     """
-    return _lsh_topk(
-        queries_df, corpus_df, id_col, vec_col, k, _bucket_udf(dim, num_planes, num_tables, seed)
-    )
-
-
-def lsh_topk_portable(
-    queries_df: DataFrame,
-    corpus_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    num_planes: int = 4,
-    num_tables: int = 16,
-    seed: int = 42,
-    scale: int = 1000,
-) -> DataFrame:
-    """lsh_topk with exact-integer bucketing — the fully oracle-checkable
-    ANN-LSH tier (query ann_lsh_portable): quantized-plane sign buckets are
-    bit-identical cross-engine, candidates re-rank through the exact fold
-    cosine. Same plan as lsh_topk; only the bucket kernel differs."""
     return _lsh_topk(
         queries_df,
         corpus_df,
@@ -548,7 +475,7 @@ def margin_bitext_pairs_portable(
     bit-identical cross-engine.
 
     Candidates come from the quantized-hyperplane sign buckets
-    (_int_bucket_udf — the dedup_embedding_lsh_portable kernel) joined
+    (_int_bucket_udf — the dedup_embedding_lsh kernel) joined
     ACROSS sides, so no all-pairs product ever forms. Scale: the x side
     is a mining batch (callers sample it; it broadcasts), the bucket join
     carries ids only, and both k-NN windows partition on a side id over
@@ -782,8 +709,8 @@ def ivf_topk_portable(
 
 def _ranked_cells_udf(centroids):
     """Cell ids ranked by cosine-to-centroid, descending, as ONE
-    Arrow-batched matmul per batch (same rationale as ``_bucket_udf`` —
-    the per-centroid fold-expression formulation codegens k×dim-term
+    Arrow-batched matmul per batch (same rationale as ``_int_bucket_udf``
+    — the per-centroid fold-expression formulation codegens k×dim-term
     trees per row). Zero-norm vectors rank all cells equal-last; ties
     break toward the lower cell id (stable argsort) — real-valued
     cosines make ties measure-zero in practice."""

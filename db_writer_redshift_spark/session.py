@@ -25,11 +25,43 @@ settings every other module assumes:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
+logger = logging.getLogger(__name__)
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Session confs the engine relies on that a running session also accepts:
+# get_spark builds with them, configure_existing pins them onto a session
+# built elsewhere.
+_RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    # a vanilla session defaults to 200 shuffle partitions — far too many
+    # tasks for local runs (AQE coalesces, but task setup still costs)
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "true",
+    # AQE coalescing. NOTE (round-8, measured): parallelismFirst=false (the
+    # "efficiency" setting) coalesces small-BYTES shuffle reads to one task
+    # by size — which serialized CPU-dense verify stages whose rows are
+    # narrow but each cost an array_intersect (dedup_ppjoin_exact's verify
+    # collapsed to a single 16 s task). Size is the wrong proxy for CPU
+    # density, so parallelismFirst stays on (partition count floors at the
+    # cluster's parallelism); the advisory size governs how big coalesced
+    # partitions get where data IS the cost.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+    # runtime bloom-filter pushdown: a selective dim-side filter builds a
+    # bloom filter that prunes the fact scan before the shuffle — a
+    # large-join lever at 100 TB, negligible locally
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
+    # rejects; read as long and convert (plans/registry.load_table)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def get_spark(
@@ -57,51 +89,22 @@ def get_spark(
         builder = builder.master(master)
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
-    builder = (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing knobs, env-overridable for cluster runs. NOTE
-        # (round-8, measured): parallelismFirst=false (the "efficiency"
-        # setting) coalesces small-BYTES shuffle reads to one task by
-        # size — which serialized CPU-dense verify stages whose rows are
-        # narrow but each cost an array_intersect (dedup_ppjoin_exact's
-        # verify collapsed to a single 16 s task). Size is the wrong
-        # proxy for CPU density, so the default stays parallelismFirst
-        # (partition count floors at the cluster's parallelism); the
-        # advisory size governs how big coalesced partitions get where
-        # data IS the cost.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # runtime bloom-filter pushdown: a selective dim-side filter
-        # builds a bloom filter that prunes the fact scan before the
-        # shuffle — a large-join lever at 100 TB, negligible locally
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    confs = {
+        **_RUNTIME_CONFS,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # cost-based optimizer: consume ANALYZE statistics
         # (catalog.analyze_table) for cardinality-based join ordering
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        "spark.sql.cbo.enabled": "true",
+        "spark.sql.cbo.joinReorder.enabled": "true",
+        "spark.sql.parquet.compression.codec": "snappy",
         # naive parquet timestamps stay naive (match DuckDB semantics)
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-        # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
-        # rejects; read as long and convert (plans/registry.load_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+        "spark.sql.timestampType": "TIMESTAMP_NTZ",
+        **(extra_conf or {}),
+    }
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # Session-scoped settings that must hold even on a pre-built session.
@@ -112,6 +115,8 @@ def get_spark(
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Pin the confs the engine relies on onto a session built elsewhere
     (e.g. the driver harness passes its own SparkSession into ``entry``).
+    A conf the session rejects is skipped with a warning that names it;
+    the remaining confs are still set.
 
     Call-site capture (see the module docstring) is NOT switched off here:
     ``spark.python.sql.dataFrameDebugging.enabled`` is a static conf, so
@@ -119,29 +124,11 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     session exists, and PySpark also caches the flag per process on the
     first ``Column`` call. A session built elsewhere keeps the value its
     builder gave it."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # a vanilla session defaults to 200 shuffle partitions — far too
-        # many tasks for local runs (AQE coalesces, but task setup still
-        # costs); align with the core count like get_spark does
-        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
-        # AQE coalescing knobs (see get_spark for the parallelismFirst
-        # serial-tail rationale)
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
-            "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-            "SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"
-        ),
-    }.items():
+    for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in some deployments; engine still works
+        except Exception as exc:  # immutable in some deployments; the engine still runs
+            logger.warning("configure_existing: skipped conf %s (%s)", k, type(exc).__name__)
     return spark
 
 

@@ -46,6 +46,8 @@ FAST_SMOKE = {
     # LLM-ops / text / similarity
     "dedup_exact_docs",
     "text_quality_scores",
+    # the same plans as ann_lsh_topk / dedup_embedding_lsh, whose names
+    # test_embedding_lsh_headlines_are_oracle_checked checks strictly
     "ann_lsh_portable",
     "dedup_embedding_lsh_portable",
     # round-9 touched internals
@@ -84,6 +86,15 @@ def duck():
 def test_query_matches_oracle(spark, duck, name):
     r = compare_query(spark, name, SF_DIR, duck)
     assert r["status"] in ("ok", "rows_only"), r["detail"]
+
+
+@pytest.mark.parametrize("name", ["ann_lsh_topk", "dedup_embedding_lsh"])
+def test_embedding_lsh_headlines_are_oracle_checked(spark, duck, name):
+    """The embedding-LSH headline queries run the exact-integer bucket
+    kernel, so they are value-checked against DuckDB, not rows-only."""
+    r = compare_query(spark, name, SF_DIR, duck)
+    assert r["status"] == "ok", (r["status"], r["detail"])
+    assert r["rows"] > 0
 
 
 def test_bad_sf_dir_raises_cleanly(spark):

@@ -27,6 +27,31 @@ def test_get_spark_turns_call_site_capture_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_configure_existing_warns_on_a_rejected_conf_and_sets_the_rest(caplog):
+    from db_writer_redshift_spark.session import configure_existing
+
+    class StubSession:
+        def __init__(self, rejected=None):
+            self.values = {}
+            self.conf = self
+            self.rejected = rejected
+
+        def set(self, key, value):
+            if key == self.rejected:
+                raise RuntimeError("immutable in this deployment")
+            self.values[key] = value
+
+    wanted = configure_existing(StubSession()).values
+    rejected = "spark.sql.adaptive.enabled"
+    assert rejected in wanted
+    stub = StubSession(rejected)
+    with caplog.at_level("WARNING", logger="db_writer_redshift_spark.session"):
+        assert configure_existing(stub) is stub
+    assert stub.values == {k: v for k, v in wanted.items() if k != rejected}
+    assert len(caplog.records) == 1
+    assert rejected in caplog.text and "RuntimeError" in caplog.text
+
+
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"testdata missing: {SF_DIR}")
 def test_minhash_lsh_build_stays_under_round_trip_budget(spark, monkeypatch):
     from py4j.clientserver import ClientServerConnection

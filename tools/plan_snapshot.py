@@ -26,7 +26,7 @@ SHOWCASE = [
     ("sample_hash_documents", "hash sampling: predicate evaluates inside the scan"),
     ("q2_best_supplier_per_part", "decorrelated MAX subquery: persisted pair relation, broadcast everything else"),
     ("events_funnel_click_purchase", "funnel: anchor aggregate collapses events before the self-join"),
-    ("ann_lsh_topk", "LSH ANN: Arrow-batched bucket matmul, id-only candidate join, broadcast query side"),
+    ("ann_lsh_topk", "LSH ANN: Arrow-batched integer bucket einsum, id-only candidate join, broadcast query side"),
     ("pipeline_curated_corpus", "curation pipeline: quality gate -> dedup keep-list agg -> semi join -> rollup"),
     ("text_pii_redaction", "PII scrub: codegen'd regexp chain, map-only, no shuffle"),
     ("token_shift_pools", "drift detector: one token shuffle, broadcast totals, 25-row TakeOrdered"),
