@@ -226,8 +226,15 @@ def _sql_str(s: str) -> str:
     """Single-quoted Spark SQL string literal, backslash-escaped — safe
     for arbitrary corpus symbols (apostrophes, periods, backslashes), so
     a punctuation-bearing pair winning a merge round binds cleanly
-    instead of crashing training mid-loop."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    instead of crashing training mid-loop. '$' is written as the escape
+    ``\\u0024``: Spark substitutes ``${...}`` in SQL text before parsing,
+    even inside string literals, so a symbol like '${0}' would otherwise
+    reach the plan rewritten."""
+    return (
+        "'"
+        + s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        + "'"
+    )
 
 
 def _bpe_merge_expr(sym_col: str, left: str, right: str) -> str:

@@ -17,7 +17,7 @@ import pytest
 import csv
 import io
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
@@ -513,6 +513,7 @@ def _ref_bpe_merge(syms: list[str], left: str, right: str) -> list[str]:
 
 
 @given(s=_adversarial_sym)
+@example(s="${0}")  # Spark's ${...} variable substitution
 @settings(**_SETTINGS)
 def test_sql_str_round_trips_any_symbol(spark, s):
     from pyspark.sql import functions as F
@@ -527,6 +528,7 @@ def test_sql_str_round_trips_any_symbol(spark, s):
     syms=st.lists(_adversarial_sym, min_size=1, max_size=7),
     pair=st.tuples(_adversarial_sym, _adversarial_sym),
 )
+@example(syms=["0"], pair=("$", "{0}"))  # Spark's ${...} variable substitution
 @settings(**_SETTINGS)
 def test_bpe_merge_expr_matches_python_model(spark, syms, pair):
     """The SQL fold merges exactly the pairs the Python model merges —
