@@ -3,7 +3,7 @@
 The reference retries each SQL statement up to 3 times with quadratic
 backoff (``sleep(tries²)``), reconnecting between attempts, and re-throws
 the final exception enriched with load errors. Spark already retries
-*tasks* (``spark.task.maxFailures``); this decorator is the app-level
+*tasks* (``spark.task.maxFailures``); this executor is the app-level
 analog around whole actions (a full-table write), where a transient
 driver-side failure (FS hiccup, metastore race) is worth one more try.
 
@@ -15,7 +15,6 @@ table swap failed after its new contents were written).
 
 from __future__ import annotations
 
-import functools
 import logging
 import time
 from collections.abc import Callable
@@ -53,18 +52,3 @@ def run_with_retry(
             (sleep or time.sleep)(tries**2)
     assert last is not None
     raise last
-
-
-def retrying(attempts: int = MAX_ATTEMPTS, what: str = "action"):
-    """Decorator form of :func:`run_with_retry`."""
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            return run_with_retry(
-                lambda: fn(*args, **kwargs), attempts=attempts, what=what or fn.__name__
-            )
-
-        return wrapper
-
-    return deco

@@ -161,11 +161,9 @@ WHERE o_orderkey % 89 = 0
 )
 def ingest_jsonl_orders_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL sibling of ingest_xml_orders_roundtrip — the line-mode JSON
-    reader under the value-hash gate, exercising exactly the splittable
-    path the round-8 ordering fix hardened (read_table_jsonl orders its
-    per-file line numbers by _metadata.file_block_start because JSON
-    files DO fan out across partitions, unlike XML/multiLine-CSV). One
-    file of the two is written LARGE relative to
+    reader under the value-hash gate, exercising the splittable path
+    (JSON files DO fan out across partitions, unlike XML/multiLine-CSV).
+    One file of the two is written LARGE relative to
     ``maxPartitionBytes``-at-scale so the contract is the same one the
     fan-out pytest pins; the cast branches mirror the XML twin: omitted
     key → NULL, varchar(6) truncation, alternating ISO / MM/dd/yyyy

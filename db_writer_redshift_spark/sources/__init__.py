@@ -1,11 +1,12 @@
-"""Data sources: CSV ingest (the reference's COPY path), manifests, parquet."""
+"""Data sources: the CSV ingest (the reference's COPY path, single file or
+sliced manifest) and its JSONL, XML, fixed-width and ORC twins, one contract."""
 
 from db_writer_redshift_spark.sources.csv_ingest import (  # noqa: F401
     LoadError,
-    apply_schema,
     guarded_schema,
     ingest_table,
     load_errors_to_exception,
+    number_lines,
     read_manifest_entries,
     read_table_csv,
     read_table_fixedwidth,

@@ -31,10 +31,12 @@ Spark mapping:
 One pass, like COPY: :func:`ingest_table` is lazy, and every typed column
 carries a guard that raises :data:`BAD_CELL` when a non-NULL cell does not
 cast. The guard runs inside the load's own write, so a clean load parses
-each slice once and runs no validation job. Only a load that failed on
-the guard pays for :func:`validate_load`, a second scan that numbers the
-lines and collects the first errors — the reference reads
-``stl_load_errors`` the same way, after a COPY failed (Redshift.php:262-285).
+each slice once and runs no validation job. Every ``read_table_*`` reader
+returns only the raw string relation; lines are numbered only on the E-2
+path: a load that failed on the guard pays for :func:`validate_load`, a
+second scan that numbers the lines (:func:`number_lines`) and collects
+the first errors — the reference reads ``stl_load_errors`` the same way,
+after a COPY failed (Redshift.php:262-285).
 
 Scale notes: ``multiLine=True`` disables intra-file split parallelism
 (a quoted newline can straddle a split), exactly like Redshift's COPY of a
@@ -52,12 +54,14 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from db_writer_redshift_spark.config.errors import UserException
 from db_writer_redshift_spark.config.schema import (
+    TEXT_TYPE,
     ColumnItem,
     TableConfig,
-    parse_decimal_size,
+    spark_type_for,
 )
 
 #: Lenient date patterns honored by the ACCEPTANYDATE analog (L-5).
@@ -124,9 +128,7 @@ def read_table_csv(
     sliced: bool = False,
 ) -> DataFrame:
     """Read raw CSV with the pinned dialect; all columns as strings, named
-    by the declared config order, plus a 1-based ``_load_line`` column
-    (input order) used by :func:`validate_load` for error reporting.
-    """
+    by the declared config order."""
     names = [i.name for i in table.items]
     raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
     reader = (
@@ -138,20 +140,7 @@ def read_table_csv(
         .option("mode", "PERMISSIVE")
         .schema(raw_schema)
     )
-    df = reader.csv(source)
-    # Per-FILE 1-based line index (exactly Redshift's stl_load_errors
-    # numbering): window partitioned by input file, ordered by the
-    # monotonic id (ascending within a partition; multiLine makes each
-    # file a single partition, so this reconstructs file order). The
-    # per-file partitioning keeps a sliced load's validation parallel —
-    # a global orderBy window would funnel every slice through ONE
-    # reducer. Only materialized when validate_load needs line numbers,
-    # which is on a failed load only (the typed projections prune the
-    # column, and the window with it).
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
-    return df.withColumn(_LINE_COL, F.row_number().over(w))
+    return reader.csv(source)
 
 
 def read_table_jsonl(
@@ -161,34 +150,14 @@ def read_table_jsonl(
 ) -> DataFrame:
     """JSON-lines twin of :func:`read_table_csv`: every declared column read
     as a string (JSON scalars coerced), then the SAME cast/validate/error
-    pipeline applies — one ingest contract across wire formats. Line
-    numbers are per-file, like the CSV path.
+    pipeline applies — one ingest contract across wire formats.
 
     (The reference supports only CSV; this is part of the §7 extension
     track — a 100 TB pipeline ingests JSONL logs constantly.)
     """
     names = [i.name for i in table.items]
     raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-    df = (
-        spark.read.schema(raw_schema)
-        .option("mode", "PERMISSIVE")
-        .json(source)
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
-    from pyspark.sql.window import Window
-
-    # Unlike multiLine CSV and native XML, line-mode JSON IS splittable:
-    # a file larger than maxPartitionBytes fans out, and Spark enumerates
-    # splits size-sorted, not offset-sorted, so a bare monotonic-id
-    # window could interleave chunks. Ordering by the hidden
-    # _metadata.file_block_start first makes per-file line numbers
-    # correct by construction: block start strictly increases with file
-    # offset, and the monotonic id orders rows within one block (pinned
-    # by tests/test_ingest.py::test_jsonl_line_numbers_survive_split).
-    w = Window.partitionBy(F.input_file_name()).orderBy(
-        "_block_start", F.monotonically_increasing_id()
-    )
-    return df.withColumn(_LINE_COL, F.row_number().over(w)).drop("_block_start")
+    return spark.read.schema(raw_schema).option("mode", "PERMISSIVE").json(source)
 
 
 def read_table_xml(
@@ -201,16 +170,7 @@ def read_table_xml(
     datasource (the spark-xml package folded into core): every declared
     column read as a string from ``<row_tag>`` elements, then the SAME
     cast/validate/error pipeline applies — one ingest contract across
-    wire formats (CSV/JSONL/ORC/XML). Row numbers are per-file in
-    element order, like the CSV path's line numbers: Spark's native XML
-    source is NON-SPLITTABLE per file (a rowTag can straddle any byte
-    split, so unlike spark-xml's XmlInputFormat the core datasource
-    never splits — verified empirically and pinned by
-    tests/test_ingest.py::test_xml_single_partition_per_file, which
-    reads a file many times ``maxPartitionBytes`` as one partition), so
-    each file is one partition and the monotonic id reconstructs element
-    order exactly as the CSV path's ``multiLine`` comment documents
-    (ADVICE r7 #4).
+    wire formats (CSV/JSONL/ORC/XML).
 
     (The reference supports only CSV; §7 extension track — XML is the
     wire format of the enterprise feeds that still dominate B2B
@@ -218,16 +178,12 @@ def read_table_xml(
     """
     names = [i.name for i in table.items]
     raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-    df = (
+    return (
         spark.read.format("xml")
         .option("rowTag", row_tag)
         .schema(raw_schema)
         .load(source)
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
-    return df.withColumn(_LINE_COL, F.row_number().over(w))
 
 
 def read_table_fixedwidth(
@@ -246,18 +202,10 @@ def read_table_fixedwidth(
     right-trimmed of pad spaces (Redshift CHAR-padding semantics) and
     the trimmed ``NULL`` literal decodes to NULL (the CSV path's L-3
     contract); then the SAME cast/validate/error pipeline applies — one
-    ingest contract across wire formats.
-
-    Line numbers are per-file: the text source IS splittable (like
-    line-mode JSON), so the window orders by the hidden
-    ``_metadata.file_block_start`` first, exactly the JSONL ordering
-    discipline."""
+    ingest contract across wire formats."""
     names = [i.name for i in table.items]
     assert len(widths) == len(names), (len(widths), len(names))
-    df = (
-        spark.read.text(source if isinstance(source, list) else [source])
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
+    df = spark.read.text(source if isinstance(source, list) else [source])
     cols = []
     off = 1
     for name, w in zip(names, widths):
@@ -268,14 +216,44 @@ def read_table_fixedwidth(
             .alias(name)
         )
         off += w
-    from pyspark.sql.window import Window
+    return df.select(*cols)
 
-    win = Window.partitionBy(F.input_file_name()).orderBy(
-        "_block_start", F.monotonically_increasing_id()
+
+def read_table_orc(
+    spark: SparkSession,
+    source: str | list[str],
+    table: TableConfig,
+) -> DataFrame:
+    """ORC twin of :func:`read_table_csv`: the file's native types are
+    read by the vectorized ORC reader, coerced to string, and fed through
+    the SAME cast/validate/error pipeline — one ingest contract across
+    wire formats (CSV / JSONL / ORC).
+
+    (The reference supports only CSV; §7 extension track.)
+    """
+    names = [i.name for i in table.items]
+    return spark.read.orc(source).select(
+        *[F.col(n).cast("string").alias(n) for n in names]
     )
-    return df.select(
-        *cols, F.row_number().over(win).alias(_LINE_COL)
+
+
+def number_lines(raw: DataFrame) -> DataFrame:
+    """``raw`` (any ``read_table_*`` relation) plus a 1-based per-file
+    ``_load_line`` column — exactly Redshift's stl_load_errors numbering.
+    Only :func:`validate_load` calls it, so a clean load never numbers.
+
+    One window for every format: partitioned by input file, which keeps a
+    sliced load's scan parallel (a global order would funnel every slice
+    through ONE reducer); ordered by the split's start offset in the file,
+    then by the monotonic id, which increases within a split. Splittable
+    sources (line-mode JSON, text, multi-stripe ORC) read a big file as
+    many splits; this order does not depend on how Spark packs them into
+    partitions.
+    """
+    w = Window.partitionBy(F.col("_metadata.file_path")).orderBy(
+        F.col("_metadata.file_block_start"), F.monotonically_increasing_id()
     )
+    return raw.withColumn(_LINE_COL, F.row_number().over(w))
 
 
 def _lenient_date(col: F.Column) -> F.Column:
@@ -290,79 +268,44 @@ def _lenient_ts(col: F.Column) -> F.Column:
 
 def _cast_expr(item: ColumnItem) -> F.Column:
     """Build the typed expression for one declared column (COPY's implicit
-    coercions, L-3/L-4/L-5)."""
-    t = item.type
+    coercions, L-3/L-4/L-5): a ``try_cast`` to
+    :func:`~db_writer_redshift_spark.config.schema.spark_type_for`, except
+    that date and timestamp use the lenient parsers and strings other than
+    ``text`` are truncated to their declared width."""
     col = F.col(item.name)
-    if t in ("char", "character", "nchar", "bpchar", "varchar", "character varying", "nvarchar"):
-        if item.size:
-            try:
-                width = int(str(item.size).split(",")[0])
-            except ValueError:
-                width = None
-            if width:
-                col = F.substring(col, 1, width)  # TRUNCATECOLUMNS (L-4)
-        return col
-    if t == "text":
-        return col
-    if t in ("int", "integer", "int4"):
-        return col.try_cast("int")
-    if t in ("int2", "smallint"):
-        return col.try_cast("smallint")
-    if t in ("int8", "bigint"):
-        return col.try_cast("bigint")
-    if t in ("decimal", "numeric"):
-        p, s = parse_decimal_size(item.size)
-        return col.try_cast(f"decimal({p},{s})")
-    if t in ("real", "float4"):
-        return col.try_cast("float")
-    if t in ("double precision", "float", "float8"):
-        return col.try_cast("double")
-    if t == "boolean":
-        return col.try_cast("boolean")
-    if t == "date":
+    spark_type = spark_type_for(item.type, item.size)
+    if isinstance(spark_type, T.DateType):
         return _lenient_date(col)
-    if t in ("timestamp", "timestamp without timezone"):
+    if isinstance(spark_type, T.TimestampNTZType):
         return _lenient_ts(col)
+    if not isinstance(spark_type, T.StringType):
+        return col.try_cast(spark_type)
+    if item.type != TEXT_TYPE and item.size:
+        try:
+            width = int(str(item.size).split(",")[0])
+        except ValueError:
+            width = None
+        if width:
+            col = F.substring(col, 1, width)  # TRUNCATECOLUMNS (L-4)
     return col
-
-
-def apply_schema(raw: DataFrame, table: TableConfig) -> DataFrame:
-    """Project the raw string DataFrame to the declared schema:
-    drop ``ignore`` columns (L-16), rename to dbName, cast per type.
-    An uncastable cell reads as NULL (see :func:`guarded_schema`)."""
-    exprs = [
-        _cast_expr(item).alias(item.db_name) for item in table.effective_items
-    ]
-    return raw.select(*exprs)
-
-
-_STRINGY = {
-    "char",
-    "character",
-    "nchar",
-    "bpchar",
-    "varchar",
-    "character varying",
-    "nvarchar",
-    "text",
-}
 
 
 def _uncastable(item: ColumnItem) -> F.Column | None:
     """The E-2 rejection predicate for one column: a non-NULL raw cell
     whose typed value is NULL. None for string types, which always load
     (truncation is silent, L-4)."""
-    if item.type in _STRINGY:
+    if isinstance(spark_type_for(item.type, item.size), T.StringType):
         return None
     return F.col(item.name).isNotNull() & _cast_expr(item).isNull()
 
 
 def guarded_schema(raw: DataFrame, table: TableConfig) -> DataFrame:
-    """:func:`apply_schema` whose typed columns reject bad cells: each
-    raises :data:`BAD_CELL` (``raise_error``) on a row where
-    :func:`_uncastable` holds, so the job that evaluates the relation —
-    the load's own write — fails instead of loading a NULL. Lazy: no job
-    runs here, and the line-number window is pruned away."""
+    """Project the raw string DataFrame to the declared schema: drop
+    ``ignore`` columns (L-16), rename to dbName, cast per type. Each typed
+    column rejects bad cells: it raises :data:`BAD_CELL` (``raise_error``)
+    on a row where :func:`_uncastable` holds, so the job that evaluates the
+    relation — the load's own write — fails instead of loading a NULL.
+    Lazy: no job runs here."""
     exprs = []
     for item in table.effective_items:
         typed = _cast_expr(item)
@@ -397,9 +340,10 @@ def validate_load(raw: DataFrame, table: TableConfig, max_errors: int = 10) -> l
     """Distributed scan for uncastable non-NULL cells; returns up to
     ``max_errors`` :class:`LoadError` in line order (E-2 parity).
 
-    One pass over the data: each typed column contributes its
-    :func:`_uncastable` predicate; a row failing any predicate emits
-    (column, line, raw, reason) structs that are exploded and limited.
+    One pass over the data, numbered by :func:`number_lines`: each typed
+    column contributes its :func:`_uncastable` predicate; a row failing
+    any predicate emits (column, line, raw, reason) structs that are
+    exploded and limited.
     All codegen'd — no Python in the row path.
     """
     checks = []
@@ -422,7 +366,8 @@ def validate_load(raw: DataFrame, table: TableConfig, max_errors: int = 10) -> l
     if not checks:
         return []
     errs = (
-        raw.select(F.explode(F.array_compact(F.array(*checks))).alias("e"))
+        number_lines(raw)
+        .select(F.explode(F.array_compact(F.array(*checks))).alias("e"))
         .select("e.*")
         .orderBy("line", "column")
         .limit(max_errors)
@@ -488,34 +433,3 @@ def ingest_table(
     """
     raw = read_source(spark, table, csv_path, manifest_path, s3info)
     return None if raw is None else guarded_schema(raw, table)
-
-
-def read_table_orc(
-    spark: SparkSession,
-    source: str | list[str],
-    table: TableConfig,
-) -> DataFrame:
-    """ORC twin of :func:`read_table_csv`: the file's native types are
-    read by the vectorized ORC reader, coerced to string, and fed through
-    the SAME cast/validate/error pipeline — one ingest contract across
-    wire formats (CSV / JSONL / ORC). Line numbers are per-file, like the
-    CSV path.
-
-    Caveat (shared with the CSV/JSONL paths): the per-file ordering key is
-    monotonically_increasing_id within input_file_name, which reconstructs
-    file order only while each file reads as ONE split. A multi-split ORC
-    file packs splits by size, so reported error line numbers can then be
-    off; ingest-side validation files are expected to stay below one split
-    (load slices, not lake files). A split-stable key would need the block
-    start offset, which the DataFrame reader does not expose.
-
-    (The reference supports only CSV; §7 extension track.)
-    """
-    names = [i.name for i in table.items]
-    df = spark.read.orc(source).select(
-        *[F.col(n).cast("string").alias(n) for n in names]
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
-    return df.withColumn(_LINE_COL, F.row_number().over(w))

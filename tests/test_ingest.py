@@ -12,14 +12,20 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from db_writer_redshift_spark.config.errors import UserException
 from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
 from db_writer_redshift_spark.sources import (
-    apply_schema,
+    guarded_schema,
     ingest_table,
+    number_lines,
     read_manifest_entries,
     read_table_csv,
+    read_table_fixedwidth,
+    read_table_jsonl,
+    read_table_orc,
+    read_table_xml,
     validate_load,
 )
 
@@ -67,7 +73,7 @@ BAD = _table(
 def test_special_csv_round_trip(spark, data_path):
     """Dialect torture: doubled quotes, embedded newlines (incl. double),
     tabs, literal backslashes, single quotes — byte-identical round-trip."""
-    df = apply_schema(read_table_csv(spark, data_path("special.csv"), SPECIAL), SPECIAL)
+    df = guarded_schema(read_table_csv(spark, data_path("special.csv"), SPECIAL), SPECIAL)
     rows = {r.col1: r.col2 for r in df.collect()}
     assert rows['quote " doubled'] == 'with "two" quotes'
     assert rows["multi\nline\nfield"] == "after newline"
@@ -83,7 +89,7 @@ def test_null_literal_decodes_to_null(spark, tmp_path):
     p = tmp_path / "n.csv"
     p.write_text('id,name\n1,NULL\n2,"NULL"\n3,real\n')
     t = _table([ColumnItem("id", "id", "int"), ColumnItem("name", "name", "text")])
-    df = apply_schema(read_table_csv(spark, str(p), t), t)
+    df = guarded_schema(read_table_csv(spark, str(p), t), t)
     got = {r.id: r.name for r in df.collect()}
     # unquoted NULL → SQL NULL (L-3); Spark also nulls the quoted form
     assert got[1] is None
@@ -96,7 +102,7 @@ def test_width_truncation(spark, tmp_path):
     t = _table(
         [ColumnItem("id", "id", "int"), ColumnItem("short", "short", "varchar", "4")]
     )
-    df = apply_schema(read_table_csv(spark, str(p), t), t)
+    df = guarded_schema(read_table_csv(spark, str(p), t), t)
     assert df.collect()[0].short == "abcd"  # TRUNCATECOLUMNS (L-4)
 
 
@@ -104,7 +110,7 @@ def test_lenient_date_formats(spark, tmp_path):
     p = tmp_path / "d.csv"
     p.write_text("d\n2024-06-22\n2024/06/22\n06/22/2024\n20240622\n")
     t = _table([ColumnItem("d", "d", "date")])
-    df = apply_schema(read_table_csv(spark, str(p), t), t)
+    df = guarded_schema(read_table_csv(spark, str(p), t), t)
     vals = {str(r.d) for r in df.collect()}
     assert vals == {"2024-06-22"}  # ACCEPTANYDATE (L-5)
 
@@ -197,8 +203,6 @@ def test_manifest_entries_parse(tmp_path):
 def test_jsonl_same_pipeline_as_csv(spark, tmp_path):
     """JSON-lines source feeds the identical cast/validate path: typed
     columns, width truncation, and the Column/line error contract."""
-    from db_writer_redshift_spark.sources import read_table_jsonl
-
     p = tmp_path / "t.jsonl"
     p.write_text(
         '{"id": "1", "name": "Ada", "created": "2024-06-22"}\n'
@@ -216,7 +220,7 @@ def test_jsonl_same_pipeline_as_csv(spark, tmp_path):
     assert [e.message() for e in errs] == [
         "Column 'created', line 3: Invalid Date Format - length must be 10 or more"
     ]
-    good = apply_schema(
+    good = guarded_schema(
         read_table_jsonl(spark, str(p), t).filter("id < 3"), t
     )
     rows = {r.id: (r.name, str(r.created)) for r in good.collect()}
@@ -225,9 +229,6 @@ def test_jsonl_same_pipeline_as_csv(spark, tmp_path):
 
 def test_orc_same_pipeline_as_csv(spark, tmp_path):
     """ORC source feeds the same cast/validate contract as CSV/JSONL."""
-    from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
-    from db_writer_redshift_spark.sources import apply_schema, read_table_orc, validate_load
-
     t = TableConfig(
         table_id="t_orc",
         db_name="t_orc",
@@ -242,7 +243,7 @@ def test_orc_same_pipeline_as_csv(spark, tmp_path):
     ).write.orc(p)
     df = read_table_orc(spark, p, t)
     assert validate_load(df, t) == []
-    rows = {r.id: r.name for r in apply_schema(df, t).collect()}
+    rows = {r.id: r.name for r in guarded_schema(df, t).collect()}
     # width truncation (L-4) applies identically to the ORC path
     assert rows == {1: "alp", 2: "be", None: "ce"}
 
@@ -320,8 +321,6 @@ def test_xml_same_pipeline_as_csv(spark, tmp_path):
     """Spark 4's native XML source feeds the identical cast/validate
     path: typed columns, width truncation, and the Column/line error
     contract — one ingest contract across CSV/JSONL/ORC/XML."""
-    from db_writer_redshift_spark.sources import read_table_xml
-
     p = tmp_path / "t.xml"
     p.write_text(
         "<rows>"
@@ -341,76 +340,14 @@ def test_xml_same_pipeline_as_csv(spark, tmp_path):
     assert [e.message() for e in errs] == [
         "Column 'created', line 3: Invalid Date Format - length must be 10 or more"
     ]
-    good = apply_schema(read_table_xml(spark, str(p), t).filter("id < 3"), t)
+    good = guarded_schema(read_table_xml(spark, str(p), t).filter("id < 3"), t)
     rows = {r.id: (r.name, str(r.created)) for r in good.collect()}
     assert rows == {1: ("Ada", "2024-06-22"), 2: ("Bel", "2024-06-22")}
-
-def test_xml_single_partition_per_file(spark, tmp_path):
-    """The XML line-number contract rests on the native XML source being
-    NON-SPLITTABLE per file (csv_ingest.read_table_xml's docstring,
-    ADVICE r7 #4): if a future Spark made XML splittable, a file larger
-    than maxPartitionBytes would fan out and monotonic ids would
-    interleave by partition, mis-numbering validate_load errors. Pin the
-    guarantee: a file ~50x maxPartitionBytes reads as ONE partition and
-    _load_line matches element order end to end."""
-    from db_writer_redshift_spark.sources import read_table_xml
-
-    p = tmp_path / "big.xml"
-    n = 2000
-    p.write_text(
-        "<rows>\n"
-        + "\n".join(
-            f"<row><id>{i}</id><name>{'x' * 90}</name></row>"
-            for i in range(1, n + 1)
-        )
-        + "\n</rows>\n"
-    )
-    t = _table([ColumnItem("id", "id", "int"), ColumnItem("name", "name", "text")])
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    try:
-        raw = read_table_xml(spark, str(p), t)
-        assert raw.rdd.getNumPartitions() == 1
-        pairs = [(int(r.id), r._load_line) for r in raw.collect()]
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    assert pairs == [(i, i) for i in range(1, n + 1)]
-
-def test_jsonl_line_numbers_survive_split(spark, tmp_path):
-    """Line-mode JSON is SPLITTABLE (unlike multiLine CSV / native XML),
-    so a big file fans out across partitions and split enumeration is
-    size-sorted, not offset-sorted. read_table_jsonl therefore orders its
-    line-number window by _metadata.file_block_start before the monotonic
-    id — correct by construction. Pin it under a fan-out read."""
-    from db_writer_redshift_spark.sources import read_table_jsonl
-
-    p = tmp_path / "big.jsonl"
-    n = 3000
-    p.write_text(
-        "\n".join(
-            f'{{"id": "{i}", "name": "{"x" * 100}"}}' for i in range(1, n + 1)
-        )
-    )
-    t = _table([ColumnItem("id", "id", "int"), ColumnItem("name", "name", "text")])
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    try:
-        # the fan-out actually happens at this setting (the line-number
-        # window itself re-partitions by file, so measure the bare scan)
-        assert spark.read.json(str(p)).rdd.getNumPartitions() > 1
-        raw = read_table_jsonl(spark, str(p), t)
-        pairs = [(int(r.id), r._load_line) for r in raw.collect()]
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    assert sorted(pairs) == [(i, i) for i in range(1, n + 1)]
-
 
 def test_fixedwidth_same_pipeline_as_csv(spark, tmp_path):
     """Fixed-width source feeds the identical cast/validate path:
     offset slicing, pad trimming, NULL literal, width truncation, and
     the Column/line error contract."""
-    from db_writer_redshift_spark.sources import read_table_fixedwidth
-
     p = tmp_path / "t.fw"
     # widths: id 4, name 6, created 10
     p.write_text(
@@ -430,32 +367,78 @@ def test_fixedwidth_same_pipeline_as_csv(spark, tmp_path):
     assert [e.message() for e in errs] == [
         "Column 'created', line 3: Invalid Date Format - length must be 10 or more"
     ]
-    good = apply_schema(raw.filter("id < 3"), t)
+    good = guarded_schema(raw.filter("id < 3"), t)
     rows = {r.id: (r.name, str(r.created)) for r in good.collect()}
     assert rows == {1: ("Ada", "2024-06-22"), 2: ("Bel", "2024-06-22")}
-    # the NULL literal decodes to NULL after trim
-    assert apply_schema(raw.filter("id = 3"), t).collect()[0].name is None
+    # the NULL literal decodes to NULL after trim (read raw: this row's
+    # date is the bad cell, which the typed relation rejects)
+    assert raw.filter("id = 3").collect()[0].name is None
 
 
-def test_fixedwidth_line_numbers_survive_split(spark, tmp_path):
-    """The text source is splittable: per-file line numbers must follow
-    file order via the block-start discipline even when one file spans
-    many partitions."""
-    from db_writer_redshift_spark.sources import read_table_fixedwidth
-    from db_writer_redshift_spark.sources.csv_ingest import _LINE_COL
+ID_NAME = _table([ColumnItem("id", "id", "int"), ColumnItem("name", "name", "text")])
 
-    p = tmp_path / "big.fw"
-    n = 5000
-    p.write_text("\n".join(f"{i:<6}v{i:<8}" for i in range(1, n + 1)))
-    t = _table(
-        [ColumnItem("id", "id", "int"), ColumnItem("v", "v", "varchar")]
-    )
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+
+def _raw_ids(spark, tmp_path, fmt, n):
+    """The raw relation of ONE ``fmt`` file whose i-th row (1-based, in
+    file order) has id i. Rows are ~100 bytes, so at a 4 KiB
+    maxPartitionBytes a few thousand of them span many splits of the
+    splittable formats (line-mode JSON, text, multi-stripe ORC)."""
+    ids = range(1, n + 1)
+    p = str(tmp_path / f"ids.{fmt}")
+    if fmt == "orc":
+        rows = spark.range(1, n + 1, numPartitions=1).select(
+            F.col("id").cast("int").alias("id"),
+            F.sha2(F.col("id").cast("string"), 256).alias("name"),
+        )
+        # small stripes, size-checked every 100 rows: the file holds many
+        (
+            rows.write.option("orc.stripe.size", "4096")
+            .option("orc.rows.between.memory.checks", "100")
+            .option("orc.compress", "none")
+            .orc(p)
+        )
+        return read_table_orc(spark, p, ID_NAME)
+    pad = "x" * 90
+    if fmt == "csv":
+        text = "id,name\n" + "\n".join(f'{i},"{pad}"' for i in ids)
+    elif fmt == "jsonl":
+        text = "\n".join(f'{{"id": "{i}", "name": "{pad}"}}' for i in ids)
+    elif fmt == "xml":
+        rows = "\n".join(f"<row><id>{i}</id><name>{pad}</name></row>" for i in ids)
+        text = f"<rows>\n{rows}\n</rows>\n"
+    else:
+        text = "\n".join(f"{i:<6}{pad}" for i in ids)
+    with open(p, "w") as fh:
+        fh.write(text)
+    if fmt != "fixedwidth":
+        read = {"csv": read_table_csv, "jsonl": read_table_jsonl, "xml": read_table_xml}[fmt]
+        return read(spark, p, ID_NAME)
+    return read_table_fixedwidth(spark, p, ID_NAME, [6, 90])
+
+
+@pytest.mark.parametrize("fmt", ["csv", "jsonl", "xml", "fixedwidth", "orc"])
+def test_clean_plan_numbers_no_lines(spark, tmp_path, fmt):
+    """Lines are numbered only on the E-2 path: the typed relation a clean
+    load writes has no window and reads no split offsets."""
+    typed = guarded_schema(_raw_ids(spark, tmp_path, fmt, 3), ID_NAME)
+    plan = typed._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "file_block_start" not in plan
+
+
+@pytest.mark.parametrize("fmt", ["xml", "jsonl", "fixedwidth", "orc"])
+def test_line_numbers_follow_file_order(spark, tmp_path, fmt):
+    """number_lines gives every format per-file line numbers in file order,
+    also when one file spans many splits (the native XML source never
+    splits a file)."""
+    n = 3000
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-        raw = read_table_fixedwidth(spark, str(p), t, [6, 9])
-        rows = raw.select("id", _LINE_COL).collect()
-        assert len(rows) == n
-        assert all(int(r.id) == r[_LINE_COL] for r in rows)
+        raw = _raw_ids(spark, tmp_path, fmt, n)
+        if fmt != "xml":
+            assert raw.select(F.spark_partition_id()).distinct().count() >= 2
+        pairs = [(int(r.id), r._load_line) for r in number_lines(raw).collect()]
     finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert sorted(pairs) == [(i, i) for i in range(1, n + 1)]

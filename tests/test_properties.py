@@ -22,7 +22,7 @@ from hypothesis import strategies as st
 
 from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
 from db_writer_redshift_spark.operators.merge import upsert_dataframes
-from db_writer_redshift_spark.sources import apply_schema, read_table_csv
+from db_writer_redshift_spark.sources import guarded_schema, read_table_csv
 
 # Text cells: printable ASCII + the dialect's torture characters + unicode.
 # Spark's CSV reader returns None for empty strings (emptyValue default) —
@@ -64,7 +64,7 @@ def test_csv_dialect_round_trip(spark, tmp_path_factory, rows):
     p = tmp_path_factory.mktemp("prop") / "t.csv"
     p.write_text(buf.getvalue(), encoding="utf-8")
 
-    df = apply_schema(read_table_csv(spark, str(p), TWO_COL), TWO_COL)
+    df = guarded_schema(read_table_csv(spark, str(p), TWO_COL), TWO_COL)
     got = sorted((r.col1, r.col2) for r in df.collect())
     assert got == sorted(rows)
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from db_writer_redshift_spark.config.errors import ApplicationException, UserException
-from db_writer_redshift_spark.operators.retry import retrying, run_with_retry
+from db_writer_redshift_spark.operators.retry import run_with_retry
 
 
 def test_succeeds_after_transient_failures():
@@ -77,16 +77,3 @@ def test_application_exception_never_retries():
     with pytest.raises(ApplicationException):
         run_with_retry(half_swapped, sleep=lambda _: None)
     assert calls["n"] == 1
-
-
-def test_decorator_form():
-    calls = {"n": 0}
-
-    @retrying(attempts=2)
-    def sometimes():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("fs hiccup")
-        return 42
-
-    assert sometimes() == 42

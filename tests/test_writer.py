@@ -13,7 +13,7 @@ from db_writer_redshift_spark.config.schema import ColumnItem, TableConfig
 from db_writer_redshift_spark.operators import catalog
 from db_writer_redshift_spark.operators.merge import upsert_dataframes
 from db_writer_redshift_spark.operators.writer import load_incremental, load_table
-from db_writer_redshift_spark.sources import apply_schema, ingest_table, read_table_csv
+from db_writer_redshift_spark.sources import guarded_schema, ingest_table, read_table_csv
 
 SIMPLE = TableConfig(
     table_id="simple",
@@ -29,7 +29,7 @@ SIMPLE = TableConfig(
 
 
 def _read(spark, data_path, name, table=SIMPLE):
-    return apply_schema(read_table_csv(spark, data_path(name), table), table)
+    return guarded_schema(read_table_csv(spark, data_path(name), table), table)
 
 
 def test_upsert_golden_merge(spark, data_path):
